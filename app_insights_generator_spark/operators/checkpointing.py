@@ -1,29 +1,28 @@
-"""Shared lineage-pinning helper for the iterative / fan-out operators.
+"""The one lineage-pinning helper for the whole package.
 
-Every driver-loop fixpoint in this package (connected components, the
-graph algorithms, k-means) truncates lineage once per round so the plan
-stays flat, and every fan-out operator pins shared intermediates so
-Catalyst doesn't recompute the subtree per consuming branch (the measured
-trap in [[catalyst-traps]] / operators/dedup.py's module docstring).
+Every driver-loop fixpoint (connected components, the graph algorithms,
+k-means) truncates lineage once per round so the plan stays flat, and
+every fan-out operator or query pins shared intermediates so Catalyst
+does not recompute the subtree per consuming branch. All of them call
+:func:`pin`; nothing else in the package calls ``localCheckpoint`` or
+``checkpoint`` (tests/test_pin_policy.py guards this).
 
-``pin`` is the one place that decides HOW: ``checkpoint_dir=None`` uses
-``localCheckpoint(eager=True)`` — fastest, but the pinned blocks live in
-EXECUTOR storage with lineage truncated, so on a real cluster an executor
-loss (including dynamic-allocation decommission) makes them unrecoverable
-and fails the job. Passing a reliable-storage path (HDFS/S3/DBFS)
-switches to ``setCheckpointDir`` + ``.checkpoint(eager=True)``, which
-survives executor loss. Output is identical either way (pinned in
-tests/test_dedup.py and tests/test_graph.py).
+Volatile or reliable is a deployment choice, and Spark already owns the
+switch: the session's checkpoint directory, set at launch with
+``spark.checkpoint.dir`` or later with ``sc.setCheckpointDir``.
 
-The session checkpoint dir is set ONCE (ADVICE r08): a repeat call with
-the same root is a no-op, a conflicting path warns and keeps the
-session's existing dir — silently redirecting would re-home every other
-operator's reliable checkpoints mid-session. Per-round checkpoint files
-accumulate under the dir; enable
-``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (or sweep the
-dir between jobs) on long-lived clusters — documented rather than forced
-because cleanup-on-GC also deletes checkpoints a caller may want to
-re-attach to after driver restart.
+- No checkpoint dir (the default): ``localCheckpoint(eager=True)``. It is
+  the fastest, but the pinned blocks live in executor storage with
+  lineage truncated, so on a cluster an executor loss (dynamic-allocation
+  decommission included) makes them unrecoverable and fails the job.
+- Checkpoint dir set (HDFS/S3/DBFS on a cluster):
+  ``checkpoint(eager=True)`` writes the pinned rows to that dir, so they
+  survive executor loss. It costs one extra job per pin for the write.
+
+Output is identical either way (tests run the operators in both modes).
+Reliable checkpoint files accumulate under the dir; on long-lived
+clusters enable ``spark.cleaner.referenceTracking.cleanCheckpoints=true``
+or sweep the dir between jobs.
 """
 
 from __future__ import annotations
@@ -31,23 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def pin(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage; see module docstring
-    for the executor-loss trade-off the ``checkpoint_dir`` switch governs."""
-    if checkpoint_dir is None:
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` and truncate its lineage: a reliable checkpoint
+    when the session has a checkpoint dir, a local checkpoint otherwise."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager=True)
-    sc = df.sparkSession.sparkContext
-    current = sc._jsc.sc().getCheckpointDir()
-    if not current.isDefined():
-        sc.setCheckpointDir(checkpoint_dir)
-    elif checkpoint_dir.rstrip("/") not in current.get():
-        # setCheckpointDir stores <dir>/<app-uuid>; a different root means
-        # a genuine conflict — keep the session's dir, warn the caller.
-        import warnings
-
-        warnings.warn(
-            f"session checkpoint dir already {current.get()!r}; keeping it "
-            f"(requested {checkpoint_dir!r})",
-            stacklevel=3,
-        )
     return df.checkpoint(eager=True)

@@ -10,14 +10,16 @@ Design for 100 TB:
   Catalyst re-evaluate the shingling 64x per row), and partial aggregation
   does the mins map-side;
 - LSH banding turns the O(n^2) pair space into a banded equi self-join
-  over a PINNED narrow (id, band, band_hash) table (round 13): the pin
-  computes the signature aggregation exactly once (the round-11 aliased
-  self-join ran it once per side; the round-12 per-bucket collect_list
-  form ran it once but parked each bucket's O(|bucket|^2) pair array in
-  a single task — an OOM/straggler cliff on boilerplate-heavy corpora),
-  while the join streams pairs and AQE skew-splitting bounds hot buckets.
+  over a PINNED narrow (id, band, band_hash) table: the pin computes the
+  signature aggregation exactly once (an aliased self-join would run it
+  once per side), while the join streams pairs and AQE skew-splitting
+  bounds hot buckets (a per-bucket pair array would park each bucket's
+  O(|bucket|^2) pairs in a single task);
 - candidate pairs are verified with exact Jaccard on shingle arrays, so
-  the output has no LSH false positives — only (tunable) false negatives.
+  the output has no LSH false positives — only (tunable) false negatives;
+- every pin goes through operators/checkpointing.pin, so the session's
+  ``spark.checkpoint.dir`` decides whether pinned intermediates survive
+  executor loss.
 """
 
 from __future__ import annotations
@@ -31,27 +33,6 @@ from app_insights_generator_spark.operators.text import (
     shingles_from_tokens,
     tokens,
 )
-
-
-def _pin(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Materialize and pin a (small) intermediate so upstream caches can be
-    released and fan-out consumers reuse one computation.
-
-    ``checkpoint_dir=None`` uses ``localCheckpoint(eager=True)`` — fastest,
-    but the pinned blocks live in EXECUTOR storage with lineage truncated,
-    so on a real cluster an executor loss (including dynamic-allocation
-    decommission) makes them unrecoverable and fails the job. Passing a
-    reliable-storage path (HDFS/S3/DBFS) switches to
-    ``setCheckpointDir`` + ``.checkpoint(eager=True)``, which survives
-    executor loss — the same reliable-checkpoint story the sweep operators
-    use (operators/sweep.py ``checkpoint_dir``; SCALE.md). Output is
-    identical either way (pinned in tests/test_dedup.py).
-
-    Since round 9 this delegates to the shared
-    :func:`operators.checkpointing.pin` (the graph fixpoints and k-means
-    take the same ``checkpoint_dir`` now); the set-dir-once + warn-on-
-    conflict + cleanup story lives in that module's docstring."""
-    return _shared_pin(df, checkpoint_dir)
 
 
 def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle_n: int) -> DataFrame:
@@ -117,21 +98,17 @@ def minhash_signatures(
     return _signatures_from_sets(_shingle_sets(df, id_col, text_col, shingle_n), num_hashes)
 
 
-def _candidates_from_sets(
-    sh: DataFrame, num_hashes: int, bands: int, checkpoint_dir: str | None = None
-) -> DataFrame:
+def _candidates_from_sets(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     rows = num_hashes // bands
     sig = _signatures_from_sets(sh, num_hashes)
-    # Pairs come from an equi self-join over a PINNED narrow banded table
-    # (round 13). History: the round-11 banded self-join recomputed the
-    # 64-hash signature aggregation once per join side (aliased subtrees
-    # get no ReusedExchange — 132 xxhash64 exprs in the plan); round 12
-    # replaced it with per-bucket collect_list + i<j combinations, which
-    # computed signatures once but concentrated every bucket in ONE
-    # aggregation row and ONE task — flatten(transform(...)) built the
-    # O(|bucket|^2) pair array in memory before explode, an OOM/straggler
-    # cliff on boilerplate-heavy corpora where exact-duplicate docs share
-    # identical band hashes at ANY banding parameters (ADVICE r12, high).
+    # Pairs come from an equi self-join over a PINNED narrow banded table.
+    # Without the pin, the aliased self-join recomputes the 64-hash
+    # signature aggregation once per join side (aliased subtrees get no
+    # ReusedExchange). Per-bucket collect_list + i<j combinations compute
+    # signatures once but concentrate every bucket in ONE aggregation row
+    # and ONE task, building the O(|bucket|^2) pair array in memory — an
+    # OOM/straggler cliff on boilerplate-heavy corpora, where
+    # exact-duplicate docs share band hashes at ANY banding parameters.
     # Pinning the (id, band, bhash) rows first gets both properties at
     # once: the signature subtree runs exactly once (both join sides scan
     # the pin), pairs STREAM out of the join (no materialized pair
@@ -141,7 +118,7 @@ def _candidates_from_sets(
     # 2.5-2.9s; synthetic hot bucket (2,000 identical docs, ~2.0M pairs):
     # 26.7s -> 12.2s, pair sets identical in both cases.
     # NULL-id guard replicates the old join's a._id < b._id semantics.
-    banded = _pin(
+    banded = _shared_pin(
         sig.select(
             "_id",
             F.explode(
@@ -161,8 +138,7 @@ def _candidates_from_sets(
             ).alias("bk"),
         )
         .select("_id", "bk.band", "bk.bhash")
-        .filter(F.col("_id").isNotNull()),
-        checkpoint_dir,
+        .filter(F.col("_id").isNotNull())
     )
     a = banded.select(F.col("_id").alias("id_a"), "band", "bhash")
     b = banded.select(F.col("_id").alias("id_b"), "band", "bhash")
@@ -239,7 +215,6 @@ def near_dedup_minhash(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.7,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact-Jaccard verification.
 
@@ -247,16 +222,14 @@ def near_dedup_minhash(
     the MinHash signatures and BOTH sides of the verify self-join — the
     naive composition tokenized+shingled the corpus three times (the
     costliest step: regex splits over every document). The (tiny) verified
-    pair list is pinned (see :func:`_pin`) so the cache can be released
-    before returning; at 100 TB the persist spills to disk, which still
-    beats two extra full text-processing passes. Pass ``checkpoint_dir``
-    on a cluster: the default localCheckpoint pin cannot survive executor
-    loss."""
+    pair list is pinned so the cache can be released before returning; at
+    100 TB the persist spills to disk, which still beats two extra full
+    text-processing passes."""
     sh = _shingle_sets(df, id_col, text_col, shingle_n).persist()
     pairs = _jaccard_from_sets(
-        sh, _candidates_from_sets(sh, num_hashes, bands, checkpoint_dir), threshold
+        sh, _candidates_from_sets(sh, num_hashes, bands), threshold
     )
-    pinned = _pin(pairs, checkpoint_dir)
+    pinned = _shared_pin(pairs)
     sh.unpersist()
     return pinned
 
@@ -321,20 +294,16 @@ def hamming_band_pairs(
             )
         ).alias("ck"),
     ).select("_id", "_sig", "ck.chunk", "ck.cval")
-    # Equi self-join over a PINNED narrow chunked table — same round-13
-    # rewrite as _candidates_from_sets (see its comment for the history):
-    # the pin computes the upstream signature aggregation (64 bit-sums for
-    # SimHash) exactly once, the join streams pairs instead of building a
-    # per-bucket O(|bucket|^2) struct array in one task's memory, and a
-    # hot (chunk, cval) bucket is AQE-skew-splittable again. The round-12
-    # per-bucket array form was strictly worse here: collect_list gathered
-    # (id, full 64-bit signature) structs, duplicating both signatures per
-    # pair inside the flattened array (ADVICE r12, medium).
+    # Equi self-join over a PINNED narrow chunked table, as in
+    # _candidates_from_sets: the pin computes the upstream signature
+    # aggregation (64 bit-sums for SimHash) exactly once, the join streams
+    # pairs instead of building a per-bucket O(|bucket|^2) struct array in
+    # one task's memory, and a hot (chunk, cval) bucket stays
+    # AQE-skew-splittable.
     # NULL guard replicates equi-join semantics exactly: a NULL cval/_id
     # never matched in the old join.
-    pinned = _pin(
-        chunked.filter(F.col("cval").isNotNull() & F.col("_id").isNotNull()),
-        None,
+    pinned = _shared_pin(
+        chunked.filter(F.col("cval").isNotNull() & F.col("_id").isNotNull())
     )
     a = pinned.select(
         F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"), "chunk", "cval"
@@ -366,7 +335,6 @@ def connected_components(
     ids: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Duplicate-cluster assignment: connected components over a pair graph
     by iterative hash-min label propagation. Output: [<id_col>, component]
@@ -379,27 +347,22 @@ def connected_components(
     - each round is ONE shuffle: edges join labels on src, then min per dst
       (classic hash-min; rounds needed = graph diameter, and dedup-cluster
       diameters are tiny);
-    - a checkpoint per round truncates the lineage so the plan does not
-      grow exponentially with iterations (the classic iterative-Spark
-      failure mode); ``checkpoint_dir=None`` uses localCheckpoint (see
-      :func:`_pin` for the executor-loss caveat), a reliable-storage path
-      survives executor loss — and matters MORE here than for the one-shot
-      pins, since a lost round-k block kills all later rounds;
+    - a pin per round truncates the lineage so the plan does not grow
+      exponentially with iterations (the classic iterative-Spark failure
+      mode). Set ``spark.checkpoint.dir`` on a cluster: a reliable pin
+      matters MORE here than for the one-shot pins, since a lost round-k
+      block kills all later rounds;
     - convergence check is a count of changed labels — one scalar to the
       driver per round, never the labels themselves, collected by an
-      ``observe()`` metric DURING the pin job (round 13): the old separate
-      ``agg(sum(_changed))`` action was one extra job per iteration — pure
-      per-job fixed cost locally and one extra pinned-table scan per round
-      at scale. Verified on both pin paths (localCheckpoint and reliable
-      checkpoint) that the metric fires from the eager pin action.
+      ``observe()`` metric DURING the pin job, so the check costs no extra
+      action. The metric fires from the eager pin in both pin modes.
     """
     from pyspark.sql import Observation
 
-    sym = _pin(
+    sym = _shared_pin(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
     labels = ids.select(F.col(id_col).alias("node"), F.col(id_col).alias("component"))
     changed = 0
@@ -422,8 +385,8 @@ def connected_components(
             )
         )
         obs = Observation()
-        new_labels = _pin(
-            new_labels.observe(obs, F.sum("_changed").alias("n")), checkpoint_dir
+        new_labels = _shared_pin(
+            new_labels.observe(obs, F.sum("_changed").alias("n"))
         )
         changed = obs.get["n"] or 0
         labels = new_labels.drop("_changed")
@@ -522,13 +485,12 @@ def incremental_near_dedup(
     storage anyway (the streaming ingest, the compaction receipts) pass
     the read-back staged table so the batch's shingle+signature subtree
     is computed exactly once per batch. When None it is built here and
-    PINNED (round 13): the batch index feeds the probe side, the union
+    PINNED: the batch index feeds the probe side, the union
     target AND the verify shingle lookup — without the pin the costliest
     per-batch work (tokenize/shingle/64-hash-min) ran up to three times."""
     if batch_index is None:
-        batch_index = _pin(
-            build_band_index(new_df, id_col, text_col, shingle_n, num_hashes, bands),
-            None,
+        batch_index = _shared_pin(
+            build_band_index(new_df, id_col, text_col, shingle_n, num_hashes, bands)
         )
     full = index.unionByName(batch_index)
     probe = batch_index.select("band", "bhash", F.col("_id").alias("_bid"))
@@ -687,7 +649,6 @@ def jaccard_join_prefix_filter(
     shingle_n: int = 3,
     threshold: float = 0.5,
     positional: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """EXACT Jaccard similarity self-join >= threshold via prefix
     filtering (the AllPairs/PPJoin family, Bayardo et al. 2007) — the
@@ -741,7 +702,7 @@ def jaccard_join_prefix_filter(
     # collect_list+sort aggregation the old twin posexplode subtrees each
     # re-ran (guide §1.2: don't compute things twice; measured on the
     # containment twin: 4.3s -> 2.6s at sf0.1, rows identical).
-    # DISK_ONLY (round 13, VERDICT r12): this is the fully exploded
+    # DISK_ONLY: this is the fully exploded
     # positional token table — row count = corpus token count — and it is
     # held across the prefix join; MEMORY_AND_DISK would compete with the
     # join's execution memory at scale for a table that is scanned
@@ -788,7 +749,7 @@ def jaccard_join_prefix_filter(
         .distinct()
     )
     pairs = _jaccard_from_sets(sh, cand, threshold)
-    pinned = _pin(pairs, checkpoint_dir)
+    pinned = _shared_pin(pairs)
     pos_rows.unpersist()
     sh.unpersist()
     return pinned
@@ -800,18 +761,13 @@ def winnowing_fingerprint_rows(
     text_col: str,
     k: int = 4,
     w: int = 4,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The selected winnowing fingerprint SET as rows: one distinct
-    (doc_id, wmin) per document fingerprint, pinned via :func:`_pin`
-    (the explode+window subtree always fans out downstream; pass
-    ``checkpoint_dir`` on a cluster — the default localCheckpoint pin
-    cannot survive executor loss). Shared core of :func:`winnowing_stats`
-    and the cross-split contamination audit — same grams, window minima,
-    and clamped-window semantics."""
-    return _pin(
-        _winnowing_selected_rows(df, id_col, text_col, k, w), checkpoint_dir
-    )
+    (doc_id, wmin) per document fingerprint, pinned because the
+    explode+window subtree always fans out downstream. Shared core of
+    :func:`winnowing_stats` and the cross-split contamination audit —
+    same grams, window minima, and clamped-window semantics."""
+    return _shared_pin(_winnowing_selected_rows(df, id_col, text_col, k, w))
 
 
 def _winnowing_selected_rows(
@@ -859,7 +815,6 @@ def winnowing_stats(
     text_col: str,
     k: int = 4,
     w: int = 4,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm): hash every k-token gram, slide a
@@ -903,7 +858,7 @@ def winnowing_stats(
         F.greatest(F.size("toks") - k + 1, F.lit(0)).alias("m"),
     )
     # The pinned fan-out table is the (doc, wmin) GRAIN, not the raw
-    # selected-window rows (round 12): every downstream branch consumes
+    # selected-window rows: every downstream branch consumes
     # either distinct fingerprints or their per-doc multiplicities, so one
     # groupBy right after the window collapses the pin to the fingerprint
     # set (cnt = selected window-ends per fingerprint, i.e. the old
@@ -912,11 +867,10 @@ def winnowing_stats(
     # table. The explode+window subtree still runs ONCE, inside the pin's
     # lineage (zero Window nodes in the final plan — guarded in
     # test_plans).
-    d = _pin(
+    d = _shared_pin(
         _winnowing_selected_rows(df, id_col, text_col, k, w)
         .groupBy("doc_id", "wmin")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.any_value("m").alias("m")),
-        checkpoint_dir,
+        .agg(F.count(F.lit(1)).alias("cnt"), F.any_value("m").alias("m"))
     )
     stats = d.groupBy("doc_id").agg(
         F.any_value(F.col("m")).cast("long").alias("n_grams"),
@@ -966,7 +920,6 @@ def containment_join_prefix_filter(
     shingle_n: int = 3,
     threshold_bp: int = 6000,
     positional: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """EXACT directed CONTAINMENT self-join: emit (id_a, id_b) where
     C(A->B) = |A∩B| / |A| >= threshold — A's shingles mostly appear in
@@ -1061,7 +1014,7 @@ def containment_join_prefix_filter(
             ),
         )
     )
-    pinned = _pin(verified, checkpoint_dir)
+    pinned = _shared_pin(verified)
     pos_rows.unpersist()
     sh.unpersist()
     return pinned

@@ -7,20 +7,18 @@ additions, starting with PageRank.
 Design notes (same iterative-Spark discipline as connected_components):
 - each iteration is ONE shuffle: edges join ranks on src (map-side when
   the rank table is broadcastable), then sum per dst;
-- lineage is pinned per round so the plan stays flat; every algorithm
-  takes ``checkpoint_dir`` (round 9, mirroring operators/dedup.py): the
-  default ``localCheckpoint`` pin lives in executor storage and cannot
-  survive executor loss (dynamic-allocation decommission included), so a
-  real cluster passes a reliable-storage path and the pin switches to
-  ``.checkpoint`` — see operators/checkpointing.py;
+- lineage is pinned per round (operators/checkpointing.pin) so the plan
+  stays flat. The pins are local checkpoints unless the session sets
+  ``spark.checkpoint.dir``, which makes them reliable checkpoints that
+  survive executor loss (dynamic-allocation decommission included);
 - NOTHING is collected per round — the loop count is fixed, so there is
   no driver-side convergence state at all.
 
 Determinism: ranks are INTEGER fixed-point (micro-units of total mass
 ``scale``), contributions use floor division — integer sums are exact
 and associative, so the result is bit-identical regardless of partition
-merge order AND reproducible in ANSI SQL with `//`/`DIV` (the class of
-cross-engine float drift round 4 eliminated never appears). The floor
+merge order AND reproducible in ANSI SQL with `//`/`DIV` (no
+cross-engine float drift class). The floor
 steps leak a little mass (as does the simplified dangling-node handling:
 sinks absorb rank) — standard for the fixed-point formulation and
 documented behavior, not an accident of the engine.
@@ -44,7 +42,6 @@ def pagerank(
     iterations: int = 5,
     damping_pct: int = 85,
     scale: int = 1_000_000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list -> [node, rank]
     with rank in integer micro-units of ``scale`` total mass.
@@ -56,21 +53,18 @@ def pagerank(
     Every step is integer arithmetic, so the 5-iteration unrolled SQL twin
     (see pagerank_nation_trade's oracle) matches bit-for-bit.
     """
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
-
     # ONE materialization of the edge derivation (often a multi-table
     # join upstream): nodes, outdeg, and the per-iteration join all read
     # this checkpoint instead of re-running the derivation (3+ executions
     # measured on the nation-trade graph without it).
     edges = edges.select(
         F.col(src).alias(src), F.col(dst).alias(dst)
-    ).transform(_ck)
+    ).transform(pin)
     nodes = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .transform(_ck)
+        .transform(pin)
     )
     n = nodes.count()
     if n == 0:
@@ -104,7 +98,7 @@ def pagerank(
                 .cast("long")
                 .alias("rank"),
             )
-            .transform(_ck)
+            .transform(pin)
         )
     return ranks
 
@@ -115,7 +109,6 @@ def bfs_depths(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Unweighted single/multi-source BFS -> [node, depth] for every node
     reachable within ``max_iter`` hops (depth = minimum hop count).
@@ -135,9 +128,6 @@ def bfs_depths(
 
     ``sources`` must be a single-column DataFrame named ``node``.
     """
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
-
     if max_iter < 0:
         raise ValueError(f"bfs_depths: max_iter must be >= 0, got {max_iter}")
     # NULL endpoints are dropped up front: a NULL node would defeat the
@@ -146,13 +136,13 @@ def bfs_depths(
     e = (
         edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
         .filter(F.col("_src").isNotNull() & F.col("_dst").isNotNull())
-        .transform(_ck)
+        .transform(pin)
     )
     from pyspark.sql import Observation
 
     dist = sources.select(
         F.col("node"), F.lit(0).cast("int").alias("depth")
-    ).distinct().transform(_ck)
+    ).distinct().transform(pin)
     frontier = dist
     for i in range(1, max_iter + 1):
         candidates = (
@@ -160,18 +150,17 @@ def bfs_depths(
             .select(F.col("_dst").alias("node"), F.lit(i).cast("int").alias("depth"))
             .distinct()
         )
-        # ONE job per round (round 13): the frontier-empty check is an
-        # observe() metric on the fresh-frontier pin (the old isEmpty was
-        # a separate action), and the visited set is NOT re-pinned — it
-        # is a flat union of already-pinned frontier frames, so its
-        # lineage stays constant-depth without re-materializing every
-        # visited node each round (that re-pin was O(visited) work per
-        # round at scale).
+        # ONE job per round: the frontier-empty check is an observe()
+        # metric on the fresh-frontier pin (not a separate action), and
+        # the visited set is NOT re-pinned — it is a flat union of
+        # already-pinned frontier frames, so its lineage stays
+        # constant-depth without re-materializing every visited node each
+        # round (a re-pin would be O(visited) work per round at scale).
         obs = Observation()
         fresh = (
             candidates.join(dist, "node", "left_anti")
             .observe(obs, F.count(F.lit(1)).alias("n"))
-            .transform(_ck)
+            .transform(pin)
         )
         if obs.get["n"] == 0:
             break
@@ -184,7 +173,6 @@ def triangle_counts(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-node triangle participation counts -> [node, n_triangles]
     (nodes in no triangle are omitted).
@@ -208,9 +196,6 @@ def triangle_counts(
     (the triangle SET is a graph invariant), so the SQL oracle may use
     the simple lexicographic formulation and must match bit-for-bit.
     """
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
-
     und = (
         edges.filter(F.col(src) != F.col(dst))
         .select(
@@ -218,7 +203,7 @@ def triangle_counts(
             F.greatest(F.col(src), F.col(dst)).alias("_b"),
         )
         .distinct()
-        .transform(_ck)
+        .transform(pin)
     )
     deg = (
         und.select(F.col("_a").alias("node"))
@@ -236,7 +221,7 @@ def triangle_counts(
     directed = d.select(
         F.when(a_first, F.col("_a")).otherwise(F.col("_b")).alias("u"),
         F.when(a_first, F.col("_b")).otherwise(F.col("_a")).alias("v"),
-    ).transform(_ck)
+    ).transform(pin)
     wedges = (
         directed.alias("e1")
         .join(directed.alias("e2"), F.col("e1.v") == F.col("e2.u"))
@@ -265,7 +250,6 @@ def sssp(
     dst: str = "dst",
     weight: str = "w",
     max_iter: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Single/multi-source shortest paths with non-negative INTEGER edge
     weights -> [node, cost]: minimum total weight over paths of at most
@@ -284,9 +268,6 @@ def sssp(
     NULL endpoints/weights are dropped up front (a NULL node defeats
     min-merge grouping the same way it defeats BFS's anti-join).
     """
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
-
     if max_iter < 0:
         raise ValueError(f"sssp: max_iter must be >= 0, got {max_iter}")
     e = (
@@ -300,12 +281,12 @@ def sssp(
             & F.col("_dst").isNotNull()
             & F.col("_w").isNotNull()
         )
-        .transform(_ck)
+        .transform(pin)
     )
     dist = (
         sources.select(F.col("node"), F.lit(0).cast("long").alias("cost"))
         .distinct()
-        .transform(_ck)
+        .transform(pin)
     )
     for _ in range(max_iter):
         relaxed = (
@@ -319,7 +300,7 @@ def sssp(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("cost").alias("cost"))
-            .transform(_ck)
+            .transform(pin)
         )
     return dist
 
@@ -330,7 +311,6 @@ def kcore_peel(
     rounds: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-round k-core peeling -> surviving [node, deg]: symmetrize
     the edge list, then ``rounds`` times drop every node whose current
@@ -345,15 +325,12 @@ def kcore_peel(
 
     Scale: per round, one degree aggregation + two semi-joins keyed on
     node — the same one-shuffle-per-round shape as the rest of the
-    module; localCheckpoint truncates lineage so ``rounds`` stays a
+    module; the per-round pin truncates lineage so ``rounds`` stays a
     constant-factor cost, never a growing plan. Degree skew (hubs)
     lands in the groupBy, which AQE splits.
 
     Cite: reference has no graph surface (main.py); SURVEY §2.5/§2.6
     engine extension."""
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
-
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(
@@ -362,7 +339,7 @@ def kcore_peel(
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .transform(_ck)
+        .transform(pin)
     )
     cur = und
     for _ in range(rounds):
@@ -376,7 +353,7 @@ def kcore_peel(
             cur.join(keep, "a", "left_semi")
             .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
             .select("a", "b")
-            .transform(_ck)
+            .transform(pin)
         )
     return cur.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
@@ -388,7 +365,6 @@ def label_propagation(
     iterations: int = 4,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Synchronous label propagation (LPA, Raghavan et al. 2007) ->
     [node, label]: every node starts as its own label; each round every
@@ -400,18 +376,15 @@ def label_propagation(
 
     One shuffle per round: neighbor-label frequencies (groupBy with
     map-side combine) + a per-node row_number window on the same
-    partitioning; localCheckpoint truncates lineage. Driver state: none.
+    partitioning; a per-round pin truncates lineage. Driver state: none.
     The frequency table is bounded by the round's (node, distinct
     neighbor label) pairs <= edge count — never quadratic.
     """
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
-
     und = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .unionByName(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
         .distinct()
-        .transform(_ck)
+        .transform(pin)
     )
     labels = (
         und.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
@@ -427,7 +400,7 @@ def label_propagation(
             freq.withColumn("rn", F.row_number().over(pick))
             .filter(F.col("rn") == 1)
             .select("node", "label")
-            .transform(_ck)
+            .transform(pin)
         )
     return labels
 
@@ -473,7 +446,6 @@ def connected_components_star(
     id_col: str,
     max_rounds: int = 20,
     stats: dict | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -491,21 +463,16 @@ def connected_components_star(
     diameter.
 
     Each round's edge set only shrinks toward the star forest (node ->
-    component min); convergence = edge set unchanged. Round 13: the
-    check is a (count, xxhash64-sum) edge-set signature collected by an
-    ``observe()`` metric DURING each round's pin job — the old two
-    anti-join ``limit(1).count()`` actions were two extra jobs per round
-    on top of the pin. A signature match triggers ONE exact
-    symmetric-difference confirmation (both exceptAlls in a single
-    action), so convergence stays exact: a 64-bit hash-sum collision can
-    only cost one wasted confirm, never a wrong early exit;
-    localCheckpoint truncates lineage per round. Jobs per round: 3 -> 1
-    (+1 exact confirm at the fixpoint).
+    component min); convergence = edge set unchanged. The check is a
+    (count, bit_xor(xxhash64)) edge-set signature collected by an
+    ``observe()`` metric DURING each round's pin job, so it adds no
+    action. A signature match triggers ONE exact symmetric-difference
+    confirmation (both exceptAlls in a single action), so convergence
+    stays exact: a 64-bit hash collision can only cost one wasted
+    confirm, never a wrong early exit. The per-round pin truncates
+    lineage. One pin job per round, +1 exact confirm at the fixpoint.
     """
     from pyspark.sql import Observation
-
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
 
     def _sig_metrics():
         # bit_xor, not sum: xxhash64 values span the full long range and a
@@ -523,7 +490,7 @@ def connected_components_star(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .observe(obs0, *_sig_metrics())
-        .transform(_ck)
+        .transform(pin)
     )
     m0 = obs0.get
     sig = (m0["n"], m0["h"])
@@ -532,7 +499,7 @@ def connected_components_star(
         new_e = (
             _small_star(_large_star(e))
             .observe(obs, *_sig_metrics())
-            .transform(_ck)
+            .transform(pin)
         )
         m = obs.get
         new_sig = (m["n"], m["h"])
@@ -571,7 +538,6 @@ def hits(
     scale: int = 1_000_000,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """HITS (Kleinberg 1999) -> [node, hub, authority] in integer
     fixed-point: authority(v) = Σ hub(u) over in-edges, hub(u) =
@@ -584,15 +550,12 @@ def hits(
     The mutually-recursive twin of pagerank's single-score recurrence —
     together they cover both classic link-analysis formulations.
     """
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
-
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).transform(_ck)
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).transform(pin)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .transform(_ck)
+        .transform(pin)
     )
     n = nodes.count()
     if n == 0:
@@ -610,13 +573,13 @@ def hits(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("s").alias("raw"))
         )
-        auth = _renorm(nodes, raw_auth, scale, checkpoint_dir)
+        auth = _renorm(nodes, raw_auth, scale)
         raw_hub = (
             e.join(auth.withColumnRenamed("node", "dst").withColumnRenamed("s", "a"), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("a").alias("raw"))
         )
-        hub = _renorm(nodes, raw_hub, scale, checkpoint_dir)
+        hub = _renorm(nodes, raw_hub, scale)
     return (
         nodes.join(hub.withColumnRenamed("s", "hub"), "node", "left")
         .join(auth.withColumnRenamed("s", "authority"), "node", "left")
@@ -628,12 +591,7 @@ def hits(
     )
 
 
-def _renorm(
-    nodes: DataFrame,
-    raw: DataFrame,
-    scale: int,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def _renorm(nodes: DataFrame, raw: DataFrame, scale: int) -> DataFrame:
     """Integer renormalization to total mass ``scale``: s = raw * scale
     DIV Σraw (Σraw > 0 whenever the graph has any edge)."""
     total = raw.agg(F.sum("raw").alias("t"))
@@ -645,8 +603,7 @@ def _renorm(
             F.expr("coalesce(raw, 0L) * CAST(%d AS BIGINT) DIV t" % scale)
             .cast("long")
             .alias("s"),
-        ),
-        checkpoint_dir,
+        )
     )
 
 
@@ -658,7 +615,6 @@ def personalized_pagerank(
     iterations: int = 5,
     damping_pct: int = 85,
     scale: int = 1_000_000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart) -> [node, rank]:
     identical recurrence to :func:`pagerank` except ALL teleport mass
@@ -674,20 +630,17 @@ def personalized_pagerank(
 
     Same integer fixed-point discipline as pagerank: floor division at
     the same points, exact associative sums, bit-identical to the
-    unrolled-CTE SQL twin; same one-shuffle-per-round plan with
-    localCheckpoint lineage truncation. Nodes the walk never reaches
+    unrolled-CTE SQL twin; same one-shuffle-per-round plan with a
+    per-round pin truncating lineage. Nodes the walk never reaches
     hold rank 0 (emitted, not dropped — the gate witnesses them)."""
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
-
     edges = edges.select(
         F.col(src).alias(src), F.col(dst).alias(dst)
-    ).transform(_ck)
+    ).transform(pin)
     nodes = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .transform(_ck)
+        .transform(pin)
     )
     if source is None:
         source = edges.agg(F.min(src)).first()[0]
@@ -726,6 +679,6 @@ def personalized_pagerank(
                 .cast("long")
                 .alias("rank"),
             )
-            .transform(_ck)
+            .transform(pin)
         )
     return ranks

@@ -7,6 +7,9 @@
   NumPy RNG on the driver (a few KB, shipped as literals); each vector maps
   to a bit-signature bucket; candidate generation joins inside buckets
   only; exact cosine re-ranks, so results have no false positives.
+- Distributed k-means pins each round through operators/checkpointing.pin:
+  local checkpoints by default, reliable ones when the session sets
+  ``spark.checkpoint.dir``.
 """
 
 from __future__ import annotations
@@ -495,14 +498,11 @@ def refresh_ivf_index(
 
     from pyspark.sql import Observation
 
-    # ONE job (round 13): the touched-list count is an observe() metric
-    # collected DURING the append write, so the Arrow assignment UDF runs
-    # exactly once and there is no separate pin or distinct-count action.
-    # (History: round 11 pinned the assignment with an eager
-    # localCheckpoint so the count and the append would not each re-run
-    # the UDF — that was 3 jobs; the observation keeps the single-UDF-pass
-    # property with 1.) collect_set is bounded by n_lists, so the metric
-    # is O(n_lists) driver state.
+    # ONE job: the touched-list count is an observe() metric collected
+    # DURING the append write, so the Arrow assignment UDF runs exactly
+    # once and there is no separate pin or distinct-count action.
+    # collect_set is bounded by n_lists, so the metric is O(n_lists)
+    # driver state.
     add = assign_to_index(new_batch, index_dir, vec_col, id_col)
     obs = Observation()
     add.observe(obs, F.size(F.collect_set("list_id")).alias("n_touched")).write.mode(
@@ -789,7 +789,6 @@ def kmeans_parallel_init(
     rounds: int = 2,
     scale: int = 1_000_000,
     offset: int = 1_000_000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """k-means|| scalable seeding (Bahmani et al., VLDB 2012) ->
     [seed_rank, vid, weight, phi0, phi_sel].
@@ -822,19 +821,15 @@ def kmeans_parallel_init(
     MLlib initializer concept (initMode="k-means||"), re-expressed
     relationally.
 
-    ``checkpoint_dir``: per-round pins default to localCheckpoint
-    (executor-storage, lost on executor loss); pass a reliable-storage
-    path on a real cluster — see operators/checkpointing.py."""
-
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
-
-    e = quantized_long_form(embs, id_col, vec_col, scale, offset).transform(_ck)
+    Per-round pins go through operators/checkpointing.pin, so the
+    session's ``spark.checkpoint.dir`` decides whether they survive
+    executor loss."""
+    e = quantized_long_form(embs, id_col, vec_col, scale, offset).transform(pin)
     first = e.groupBy().agg(F.min("vid").alias("vid"))
     centers = (
         e.join(F.broadcast(first), "vid")
         .select(F.col("vid").alias("cid"), "d", "v")
-        .transform(_ck)
+        .transform(pin)
     )
     phi0 = None
     two48 = 281474976710656.0
@@ -870,7 +865,7 @@ def kmeans_parallel_init(
         )
         centers = centers.unionByName(
             e.join(sel, "vid").select(F.col("vid").alias("cid"), "d", "v")
-        ).transform(_ck)
+        ).transform(pin)
     assign = assign_to_centroids(e, centers)
     w = Window.orderBy(F.desc("weight"), "cid")
     seeds = (
@@ -905,7 +900,6 @@ def kmeans_fixed_point(
     scale: int = 1_000_000,
     offset: int = 1_000_000,
     checkpoint: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Distributed Lloyd's k-means in INTEGER fixed-point ->
     (assignments [vid, cid, dist], centroids [cid, d, v]).
@@ -926,10 +920,9 @@ def kmeans_fixed_point(
     Init: the k lowest-id vectors (deterministic, seedless). Empty
     clusters drop out of the centroid table (both engines identically).
     ``checkpoint=False`` skips the per-round lineage pin so plan guards
-    can inspect the full iteration DAG; with ``checkpoint=True`` the pin
-    defaults to localCheckpoint (executor storage — unrecoverable on
-    executor loss) and ``checkpoint_dir`` switches it to a reliable-
-    storage ``.checkpoint`` (operators/checkpointing.py).
+    can inspect the full iteration DAG; with ``checkpoint=True`` each
+    round goes through operators/checkpointing.pin, reliable when the
+    session sets ``spark.checkpoint.dir``.
 
     Scale: per iteration one broadcast join producing n*k*dim partial
     products -> (vid,cid) partial-agg groupBy -> n*k rows -> window by
@@ -942,7 +935,7 @@ def kmeans_fixed_point(
     scale (the gate keeps inertia per-cluster at ~1e17).
     """
     e = quantized_long_form(embs, id_col, vec_col, scale, offset)
-    e = pin(e, checkpoint_dir) if checkpoint else e
+    e = pin(e) if checkpoint else e
 
     init = (
         e.select("vid")
@@ -956,7 +949,7 @@ def kmeans_fixed_point(
     )
     cent = e.join(init, "vid").select("cid", "d", "v")
     if checkpoint:
-        cent = pin(cent, checkpoint_dir)
+        cent = pin(cent)
 
     assign = None
     for _ in range(n_iter):
@@ -984,7 +977,7 @@ def kmeans_fixed_point(
             .agg(F.expr("CAST(sum(v) DIV count(1) AS LONG)").alias("v"))
         )
         if checkpoint:
-            cent = pin(cent, checkpoint_dir)
+            cent = pin(cent)
     return assign, cent
 
 

@@ -20,6 +20,13 @@ Two modes with identical output semantics:
   not the raw rows. count = sum of pre-counts, min(display) = min of
   pre-mins. ``expand_batch_size`` additionally splits the grouping sets into
   chunks so each job's Expand factor is bounded.
+
+Both native sweeps pin their (tiny, thresholded) result so the caches
+feeding it can be released. The pin is ``checkpointing.pin``: a local
+checkpoint by default, whose blocks are lost with their executor; a
+reliable one when the session sets ``spark.checkpoint.dir``, which is
+what a cluster with dynamic allocation or spot instances (the reference's
+own EMR config, main.py:134) should do.
 """
 
 from __future__ import annotations
@@ -33,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from app_insights_generator_spark.config import InsightsConfig
+from app_insights_generator_spark.operators import checkpointing
 from app_insights_generator_spark.operators.insights import (
     INSIGHT_DELIM,
     format_value,
@@ -95,29 +103,6 @@ def union_all(dfs: Sequence[DataFrame]) -> DataFrame:
     for d in dfs[1:]:
         out = out.unionAll(d)
     return out
-
-
-def _pin_result(result: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Materialize the (tiny, thresholded) sweep output so the caches
-    feeding it can be released without losing the result.
-
-    Default: eager ``localCheckpoint`` — right for local/bench sessions,
-    but its blocks live in EXECUTOR storage: on a cluster with dynamic
-    allocation or spot instances (the reference's own EMR config,
-    main.py:134), losing an executor after the checkpoint permanently
-    fails every downstream action, because the lineage was truncated and
-    there is nothing to recompute from (ADVICE r02).
-
-    Pass ``checkpoint_dir`` (reliable storage — HDFS/S3) for cluster
-    deployments: the result is checkpointed to durable storage instead,
-    surviving any executor loss at the cost of one small write+read.
-
-    Delegates to the shared :func:`operators.checkpointing.pin` (round 9)
-    so the session checkpoint dir is set once and conflicts warn instead
-    of silently re-homing other operators' reliable checkpoints."""
-    from app_insights_generator_spark.operators.checkpointing import pin
-
-    return pin(result, checkpoint_dir or None)
 
 
 def sweep_loop(
@@ -194,7 +179,6 @@ def sweep_grouping_sets(
     total_count: int | None = None,
     preaggregate: bool = True,
     expand_batch_size: int | str | None = None,
-    checkpoint_dir: str | None = None,
     _base: DataFrame | None = None,
 ) -> DataFrame:
     """Native mode -> DataFrame[Insights], semantics identical to sweep_loop.
@@ -204,10 +188,6 @@ def sweep_grouping_sets(
     ``"auto"`` picks the volume-adaptive chunk size (_adaptive_chunk_size).
     With pre-aggregation on bucketed data the cube is usually fine for
     n<=14; batching bounds worst-case memory.
-
-    ``checkpoint_dir``: reliable-storage checkpoint location for cluster
-    deployments (see _pin_result for the executor-loss caveat of the
-    default localCheckpoint).
 
     ``_base``: an ALREADY-persisted pre-aggregated tuple table (the
     _preaggregate shape, `_pre_count` included) — sweep_apriori hands its
@@ -330,12 +310,12 @@ def sweep_grouping_sets(
     if persisted_base:
         # Materialize once (the thresholded output is tiny next to the
         # input), then release the cached pre-aggregation — otherwise every
-        # chunked sweep in a long-lived session leaks its cache (ADVICE r1).
+        # chunked sweep in a long-lived session leaks its cache.
         if interp_small:
             with _interpreted_eval(df.sparkSession):
-                result = _pin_result(result, checkpoint_dir)
+                result = checkpointing.pin(result)
         else:
-            result = _pin_result(result, checkpoint_dir)
+            result = checkpointing.pin(result)
         base.unpersist()
     return result
 
@@ -346,7 +326,6 @@ def sweep_apriori(
     cols: Sequence[str] | None = None,
     total_count: int | None = None,
     max_sets_per_job: int | None = None,
-    checkpoint_dir: str | None = None,
     level_stats: list[dict] | None = None,
 ) -> DataFrame:
     """Level-wise sweep with frequent-pattern (Apriori) pruning — output
@@ -374,7 +353,7 @@ def sweep_apriori(
     Each level chunk is persisted — consumed twice (survival flags, final
     union), and recomputation, not memory, is the expensive resource at
     scale; every cache is released before returning, the final output
-    pinned by one eager localCheckpoint of the (tiny, thresholded) result.
+    pinned by one eager pin of the (tiny, thresholded) result.
     The survival flags of ALL chunks in a level are collected by a single
     unioned action, so Spark runs the chunk aggregations concurrently —
     level latency is the slowest chunk, not the chunk sum.
@@ -386,10 +365,6 @@ def sweep_apriori(
     105-set Expand runs ~3x slower per row than a 40-set one — past
     roughly 40 projection lists the generated Expand/aggregate code leaves
     the JIT-compiled fast path.
-
-    ``checkpoint_dir``: reliable-storage checkpoint location for cluster
-    deployments (see _pin_result for the executor-loss caveat of the
-    default localCheckpoint).
     """
     cols = list(cols or cfg.agg_cols)
     max_size = cfg.max_combo_size or len(cols)
@@ -442,7 +417,6 @@ def sweep_apriori(
                 cols,
                 total_count=total_count,
                 expand_batch_size=None,
-                checkpoint_dir=checkpoint_dir,
                 _base=base,
             )
 
@@ -547,8 +521,8 @@ def sweep_apriori(
     # Materialize the final union from the still-cached level chunks, then
     # release every cache: the thresholded output is tiny next to the
     # input, and without this a long-lived session (the 100+-query oracle
-    # gate, a notebook) accumulates one cached chunk per sweep (ADVICE r1).
-    result = _pin_result(union_all(out), checkpoint_dir)
+    # gate, a notebook) accumulates one cached chunk per sweep.
+    result = checkpointing.pin(union_all(out))
     base.unpersist()
     for g in persisted:
         g.unpersist()

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from app_insights_generator_spark.operators.checkpointing import pin
 from app_insights_generator_spark.queries import _exact as _x
 from app_insights_generator_spark.queries import register
 from app_insights_generator_spark.sources import load_table
@@ -1312,7 +1313,7 @@ def theil_sen_daily_revenue_orders(
     base = daily0.agg(F.min("t0").alias("t_min"))
     daily = daily0.crossJoin(F.broadcast(base)).select(
         F.expr("t0 - t_min").alias("t"), "y"
-    ).localCheckpoint(eager=True)  # fan-out: pairs, intercepts, counts
+    ).transform(pin)  # fan-out: pairs, intercepts, counts
     a = daily.select(F.col("t").alias("ti"), F.col("y").alias("yi"))
     bb = daily.select(F.col("t").alias("tj"), F.col("y").alias("yj"))
     slopes = (
@@ -1442,7 +1443,7 @@ def siegel_repeated_median_daily_revenue_orders(
     daily = (
         daily0.crossJoin(F.broadcast(base))
         .select(F.expr("t0 - t_min").alias("t"), "y")
-        .localCheckpoint(eager=True)  # fan-out: pairs, intercepts, counts
+        .transform(pin)  # fan-out: pairs, intercepts, counts
     )
     a = daily.select(F.col("t").alias("ti"), F.col("y").alias("yi"))
     bb = daily.select(F.col("t").alias("tj"), F.col("y").alias("yj"))
@@ -2197,7 +2198,7 @@ def mann_kendall_daily_revenue_orders(
     ).agg(
         F.expr(f"CAST(SUM({_x.sql_cents('o_totalprice')}) AS BIGINT)").alias("x")
     )
-    d = d.localCheckpoint(eager=True)  # fan-out: pairs, n, ties below
+    d = pin(d)  # fan-out: pairs, n, ties below
     b = d.select(F.col("day_idx").alias("b_day"), F.col("x").alias("y"))
     p = d.join(F.broadcast(b), F.col("b_day") > F.col("day_idx")).select(
         F.expr(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from app_insights_generator_spark.operators.checkpointing import pin
 from app_insights_generator_spark.operators.joins import asof_join
 from app_insights_generator_spark.queries import _exact as _x
 from app_insights_generator_spark.queries import register
@@ -2029,7 +2030,7 @@ def markov_next_event_accuracy_events(
         .over(Window.partitionBy("user_id"))
         .cast("long")
         .alias("m"),
-    ).localCheckpoint(eager=True)  # fan-out: train matrix + test steps
+    ).transform(pin)  # fan-out: train matrix + test steps
     train = (
         step.filter(F.expr("rn * 10 <= m * 8"))
         .groupBy("from_type", "to_type")
@@ -2119,7 +2120,7 @@ def fano_burstiness_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(
         "event_type", F.expr("ts_us DIV 86400000000").alias("day_idx")
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    daily = daily.localCheckpoint(eager=True)  # fan-out: grid + moments
+    daily = pin(daily)  # fan-out: grid + moments
     grid = daily.agg(
         F.countDistinct("day_idx").cast("long").alias("n_days")
     )
@@ -2205,7 +2206,7 @@ def ab_srm_audit_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 % 2
             ).alias("b"),
         )
-        .localCheckpoint(eager=True)  # fan-out: user row + per-type join
+        .transform(pin)  # fan-out: user row + per-type join
     )
     users = arm.agg(
         F.sum("b").cast("long").alias("n_b"),
@@ -2473,9 +2474,8 @@ def cuped_adjusted_metric_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         % 2
     )
-    u = per_user.select("user_id", b.alias("b"), "x", "y").localCheckpoint(
-        eager=True
-    )  # fan-out: centering, moments, totals, and arms all read it
+    # fan-out: centering, moments, totals, and arms all read it
+    u = pin(per_user.select("user_id", b.alias("b"), "x", "y"))
     ctr = u.agg(
         F.expr("CAST(SUM(x) AS BIGINT) DIV COUNT(*)").alias("cx"),
         F.expr("CAST(SUM(y) AS BIGINT) DIV COUNT(*)").alias("cy"),
@@ -2754,7 +2754,7 @@ def jackknife_ratio_stderr_events(
             F.sum("den").cast("long").alias("bden"),
             F.count(F.lit(1)).cast("long").alias("busers"),
         )
-        .localCheckpoint(eager=True)  # fan-out: totals + pseudo-values
+        .transform(pin)  # fan-out: totals + pseudo-values
     )
     tot = per_bucket.agg(
         F.sum("bnum").cast("long").alias("tnum"),
@@ -2973,7 +2973,7 @@ def new_vs_returning_weekly_events(
             ).alias("week"),
         )
         .distinct()
-        .localCheckpoint(eager=True)  # fan-out: firsts + the weekly rollup
+        .transform(pin)  # fan-out: firsts + the weekly rollup
     )
     firsts = d.groupBy("user_id").agg(F.min("week").alias("first_week"))
     return (

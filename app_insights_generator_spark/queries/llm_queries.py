@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from app_insights_generator_spark.operators.checkpointing import pin
 from app_insights_generator_spark.operators import dedup as D
 from app_insights_generator_spark.operators import similarity as S
 from app_insights_generator_spark.operators import text as T
@@ -391,7 +392,7 @@ def dedup_compaction_receipt_documents(
             F.sum((F.col("id_b") < c).cast("long")).alias("pairs_b0"),
             F.sum((F.col("id_b") >= c).cast("long")).alias("pairs_b1"),
             F.count(F.lit(1)).cast("long").alias("pairs_total"),
-        ).localCheckpoint(eager=True)  # pin: the temp state dir is removed
+        ).transform(pin)  # pin: the temp state dir is removed
         if (
             receipt.first()["pairs_total"] != pairs_before
         ):  # conservation, pairs table
@@ -2984,7 +2985,7 @@ def ann_incremental_probe_embeddings(
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _RECALL_K)
         .select("qid", "id", "sim")
-        .localCheckpoint(eager=True)  # pinned: invariant + return reuse it
+        .transform(pin)  # pinned: invariant + return reuse it
     )
 
     truth = [(r["qid"], r["id"]) for r in exact.select("qid", "id").collect()]
@@ -3190,7 +3191,7 @@ def ivf_compaction_probe_embeddings(
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _RECALL_K)
         .select("qid", "id", "sim")
-        .localCheckpoint(eager=True)  # pinned: invariants + return reuse it
+        .transform(pin)  # pinned: invariants + return reuse it
     )
 
     truth = [(r["qid"], r["id"]) for r in exact.select("qid", "id").collect()]
@@ -3377,7 +3378,7 @@ def ivf_compaction_receipt_embeddings(
                 F.sum((F.col("id") >= c2).cast("long")).alias("rows_b2"),
                 F.count(F.lit(1)).cast("long").alias("rows_total"),
             )
-            .localCheckpoint(eager=True)  # pin: the temp dir is removed
+            .transform(pin)  # pin: the temp dir is removed
         )
     finally:
         shutil.rmtree(index_dir, ignore_errors=True)
@@ -3528,7 +3529,7 @@ def ivf_refit_decision_embeddings(
         F.when(F.col("cos_centroid") >= _REFIT_COS_FLOOR, "keep").otherwise(
             "refit"
         ),
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     decision = verdict.select("decision").first()[0]
 
     # --- audit coupling: 'keep' must agree with the measured recall ------
@@ -5800,7 +5801,7 @@ def pq_incremental_codes_embeddings(
             "code3",
             F.expr("CAST(_d0 + _d1 + _d2 + _d3 AS BIGINT)").alias("q_dist"),
             (F.col("vid") >= cut).cast("int").alias("is_new"),
-        ).localCheckpoint(eager=True)  # pin: the temp index dir is removed
+        ).transform(pin)  # pin: the temp index dir is removed
     finally:
         shutil.rmtree(idx, ignore_errors=True)
     return out
@@ -5910,7 +5911,7 @@ def pq_refit_decision_embeddings(
             F.countDistinct("code2"),
             F.countDistinct("code3"),
         ).cast("long").alias("codes_used_min"),
-    ).localCheckpoint(eager=True)  # fan-out: invariant + verdict row
+    ).transform(pin)  # fan-out: invariant + verdict row
 
     used = m.first()["codes_used_min"]
     if used < _PQ_K:
@@ -6140,9 +6141,7 @@ def ngram_novelty_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.array_distinct(T.shingles_from_tokens(F.col("toks"), 3)).alias("grams"),
     )
-    ex = sh.select("doc_id", F.explode("grams").alias("g")).localCheckpoint(
-        eager=True
-    )
+    ex = sh.select("doc_id", F.explode("grams").alias("g")).transform(pin)
     n_grams = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     n_new = (
         ex.groupBy("g")
@@ -6805,7 +6804,7 @@ def mutual_information_source_lang_documents(
     cells = (
         docs.groupBy("source", "lang")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)  # fan-out: 3 entropy branches below
+        .transform(pin)  # fan-out: 3 entropy branches below
     )
     tot = cells.agg(F.sum("c").cast("long").alias("n"))
     nll = spark.createDataFrame(
@@ -6930,7 +6929,7 @@ def unigram_entropy_by_source_documents(
     cells = (
         t.groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)  # fan-out: totals + entropy branches
+        .transform(pin)  # fan-out: totals + entropy branches
     )
     per_src = cells.groupBy("source").agg(
         F.sum("c").cast("long").alias("n"),
@@ -7044,7 +7043,7 @@ def kl_source_vs_corpus_documents(
     cells = (
         t.groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)  # fan-out: per-src, word totals, terms
+        .transform(pin)  # fan-out: per-src, word totals, terms
     )
     per_src = cells.groupBy("source").agg(
         F.sum("c").cast("long").alias("n")
@@ -7708,7 +7707,7 @@ def dsir_importance_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "lang", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("_c"))
-        .localCheckpoint(eager=True)  # fan-out: raw model, target model, doc counts
+        .transform(pin)  # fan-out: raw model, target model, doc counts
     )
     # Both models in ONE aggregation over the pinned table: tc is the
     # lang='en' slice as a conditional sum (NULL when no target rows hit
@@ -7862,7 +7861,7 @@ def kmv_vocab_ndv_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("term"),
         )
         .distinct()
-        .localCheckpoint(eager=True)  # fan-out: hashes + exact NDV audits
+        .transform(pin)  # fan-out: hashes + exact NDV audits
     )
     h = tok.select(
         "source",

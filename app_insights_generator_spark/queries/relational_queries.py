@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from app_insights_generator_spark.operators.checkpointing import pin
 from app_insights_generator_spark.queries import _exact as _x
 from app_insights_generator_spark.queries import ORACLES, register
 from app_insights_generator_spark.sources import load_table
@@ -1251,8 +1252,8 @@ def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation -> supplier nation across order lineitems, the TPC-H Q7 join
     shape): 5 iterations of INTEGER fixed-point rank (operators/graph.py
     pagerank). The iterative-fixpoint capability Spark has no built-in
-    for, expressed as one shuffle per round with localCheckpoint lineage
-    truncation; integer micro-unit arithmetic makes every iteration
+    for, expressed as one shuffle per round with a per-round pin
+    truncating lineage; integer micro-unit arithmetic makes every iteration
     bit-identical across engines (no float-drift class at all), and the
     oracle is the same recurrence unrolled into chained CTEs. The edge
     derivation is the scale-bearing part — a distinct over the full
@@ -3867,7 +3868,7 @@ def clustering_coefficient_nation_trade(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     adj = und.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
         und.select(F.col("b").alias("v"), F.col("a").alias("n"))
@@ -4164,7 +4165,7 @@ def kruskal_wallis_orders_priority(
         .cast("long")
         .alias("r2"),
         "cv",
-    ).localCheckpoint(eager=True)  # fan-out: group sums + tie term
+    ).transform(pin)  # fan-out: group sums + tie term
     g = (
         t.join(r.select("x", "r2"), "x")
         .groupBy("grp")
@@ -4172,7 +4173,7 @@ def kruskal_wallis_orders_priority(
             F.count(F.lit(1)).cast("long").alias("n_i"),
             F.sum("r2").cast("long").alias("ranksum2"),
         )
-        .localCheckpoint(eager=True)  # fan-out: N, S_q, output rows
+        .transform(pin)  # fan-out: N, S_q, output rows
     )
     nn = g.agg(F.sum("n_i").cast("long").alias("n"))
     ties = (
@@ -4325,7 +4326,7 @@ def adamic_adar_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairrev.crossJoin(F.broadcast(tot))
         .filter(F.expr("cents * np >= tc"))
         .select("a", "b")
-        .localCheckpoint(eager=True)  # fan-out: adj, deg, anti-join below
+        .transform(pin)  # fan-out: adj, deg, anti-join below
     )
     adj = heavy.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
         heavy.select(F.col("b").alias("v"), F.col("a").alias("n"))
@@ -4710,7 +4711,7 @@ def kendall_tau_qty_price_lineitem(
     )
     cells = t.groupBy("x", "yb").agg(
         F.count(F.lit(1)).cast("long").alias("m")
-    ).localCheckpoint(eager=True)  # fan-out: C/D join + both tie margins
+    ).transform(pin)  # fan-out: C/D join + both tie margins
     a = cells.select(
         F.col("x").alias("ax"), F.col("yb").alias("ay"), F.col("m").alias("am")
     )

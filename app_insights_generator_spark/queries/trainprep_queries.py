@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from app_insights_generator_spark.operators.checkpointing import pin
 from app_insights_generator_spark.queries import register
 from app_insights_generator_spark.queries._exact import sql_hex_to_int
 from app_insights_generator_spark.sources import load_table
@@ -845,7 +846,7 @@ def token_budget_waterfill_documents(spark: SparkSession, sf_dir: str) -> DataFr
         .cast("long")
         .alias("n"),
         F.sum("t").over(Window.partitionBy()).cast("long").alias("total"),
-    ).localCheckpoint(eager=True)  # fan-out: b/k/kstar-row lookups below
+    ).transform(pin)  # fan-out: b/k/kstar-row lookups below
     b = r.agg(
         F.expr("MIN(total) * 6 DIV 10").alias("budget"),
         F.min("n").alias("n_src"),
@@ -952,7 +953,7 @@ def apportion_largest_remainder_documents(
         F.expr(
             "1000 * n_docs - (1000 * n_docs DIV total) * total"
         ).alias("remainder"),
-    ).localCheckpoint(eager=True)  # fan-out: leftover sum + seat ranking
+    ).transform(pin)  # fan-out: leftover sum + seat ranking
     l = q.agg(
         F.expr("1000 - CAST(SUM(floor_quota) AS BIGINT)").alias("leftover")
     )
@@ -1586,7 +1587,7 @@ def pack_next_fit_sql_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number()
         .over(Window.partitionBy(F.expr("doc_id DIV 25")).orderBy("doc_id"))
         .alias("rn"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     base.createOrReplaceTempView("_nf_base")
     try:
         return spark.sql(

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -20,16 +21,23 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-@pytest.fixture(scope="session")
-def ckpt_root(tmp_path_factory) -> str:
-    """ONE reliable-checkpoint root shared by every checkpoint_dir-using
-    test (VERDICT r09 item 5): the session checkpoint dir is set once by
-    design (warn-don't-rehome, operators/checkpointing.py pin), so
-    per-test tmp_path roots made later tests trip the conflict warning
-    incidentally — test isolation then depended on the warn path. With a
-    single session root, pin's repeat call is the designed silent no-op;
-    the warn path is exercised solely by the dedicated conflict test
-    (test_pin_conflicting_checkpoint_dir_warns_and_keeps_session_dir),
-    and pyproject.toml escalates any OTHER occurrence of that warning to
-    an error."""
-    return str(tmp_path_factory.mktemp("session_ckpt"))
+@pytest.fixture
+def reliable_pins(spark, tmp_path):
+    """Context manager that runs its block with reliable pins: the session
+    checkpoint dir points at ``tmp_path`` inside the block, so every
+    ``checkpointing.pin`` writes a reliable checkpoint there. On a normal
+    exit it asserts that checkpoint files were written, which proves the
+    mode really switched. The dir is unset again on the way out, so later
+    tests run in the default local-checkpoint mode whatever the order."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def mode():
+        sc.setCheckpointDir(str(tmp_path))
+        try:
+            yield
+        finally:
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+        assert any(tmp_path.rglob("rdd-*")), "no reliable checkpoint was written"
+
+    return mode

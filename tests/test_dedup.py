@@ -481,60 +481,53 @@ def test_cross_split_contamination_conservation(spark, sf_dir):
         assert r.leak_bp == r.n_leaked * 10000 // r.n_fp
 
 
-def test_reliable_checkpoint_mode_output_equality(spark, ckpt_root, corpus):
-    """checkpoint_dir plumbing (VERDICT r07 item #5): the reliable-storage
-    checkpoint mode must produce exactly the rows of the default
-    localCheckpoint mode for every operator that pins an intermediate.
-    The default mode's pinned blocks live in executor storage and cannot
-    survive executor loss on a cluster; checkpoint_dir is the dynamic-
-    allocation-safe path."""
-    ckpt = ckpt_root  # shared session root: see conftest.ckpt_root
+def test_reliable_checkpoint_mode_output_equality(spark, reliable_pins, corpus):
+    """With ``spark.checkpoint.dir`` set, every dedup operator that pins an
+    intermediate (including the banded hamming join and the incremental
+    batch index) must produce exactly the rows of the default
+    local-checkpoint mode. The default mode's pinned blocks live in
+    executor storage and cannot survive executor loss on a cluster; the
+    reliable mode is the dynamic-allocation-safe deployment."""
 
-    local = D.near_dedup_minhash(corpus, "doc_id", "text", threshold=0.5)
-    reliable = D.near_dedup_minhash(
-        corpus, "doc_id", "text", threshold=0.5, checkpoint_dir=ckpt
-    )
-    key = lambda r: (r.id_a, r.id_b)  # noqa: E731
-    assert sorted(map(key, local.collect())) == sorted(map(key, reliable.collect()))
+    def rows(d):
+        return sorted(map(tuple, d.collect()))
 
-    local = D.winnowing_fingerprint_rows(corpus, "doc_id", "text", k=4, w=4)
-    reliable = D.winnowing_fingerprint_rows(
-        corpus, "doc_id", "text", k=4, w=4, checkpoint_dir=ckpt
-    )
-    key = lambda r: (r.doc_id, r.i, r.wmin)  # noqa: E731
-    assert sorted(map(key, local.collect())) == sorted(map(key, reliable.collect()))
-
-    local = D.jaccard_join_prefix_filter(corpus, "doc_id", "text", threshold=0.5)
-    reliable = D.jaccard_join_prefix_filter(
-        corpus, "doc_id", "text", threshold=0.5, checkpoint_dir=ckpt
-    )
-    key = lambda r: (r.id_a, r.id_b)  # noqa: E731
-    assert sorted(map(key, local.collect())) == sorted(map(key, reliable.collect()))
-
-    local = D.containment_join_prefix_filter(
-        corpus, "doc_id", "text", threshold_bp=6000
-    )
-    reliable = D.containment_join_prefix_filter(
-        corpus, "doc_id", "text", threshold_bp=6000, checkpoint_dir=ckpt
-    )
-    key = lambda r: (r.id_a, r.id_b, r.containment_bp)  # noqa: E731
-    assert sorted(map(key, local.collect())) == sorted(map(key, reliable.collect()))
-
-    local = D.connected_components(
-        D.near_dedup_minhash(corpus, "doc_id", "text", threshold=0.5),
-        corpus.select("doc_id"),
-    )
-    reliable = D.connected_components(
-        D.near_dedup_minhash(corpus, "doc_id", "text", threshold=0.5),
-        corpus.select("doc_id"),
-        checkpoint_dir=ckpt,
-    )
-    key = lambda r: (r.doc_id, r.component)  # noqa: E731
-    assert sorted(map(key, local.collect())) == sorted(map(key, reliable.collect()))
-
-    import os
-
-    assert os.path.isdir(ckpt) and os.listdir(ckpt), "reliable dir unused"
+    calls = {
+        "minhash": lambda: D.near_dedup_minhash(corpus, "doc_id", "text", threshold=0.5),
+        "winnowing": lambda: D.winnowing_fingerprint_rows(
+            corpus, "doc_id", "text", k=4, w=4
+        ),
+        "prefix_jaccard": lambda: D.jaccard_join_prefix_filter(
+            corpus, "doc_id", "text", threshold=0.5
+        ),
+        "prefix_containment": lambda: D.containment_join_prefix_filter(
+            corpus, "doc_id", "text", threshold_bp=6000
+        ),
+        "components": lambda: D.connected_components(
+            D.near_dedup_minhash(corpus, "doc_id", "text", threshold=0.5),
+            corpus.select("doc_id"),
+        ),
+        # exact copies under new ids: hamming 0, so every copy pair is found
+        "simhash": lambda: D.simhash_pairs(
+            corpus.unionByName(corpus.selectExpr("doc_id + 100 AS doc_id", "text")),
+            "doc_id",
+            "text",
+        ),
+        # batch = doc_id % 4 != 0: pairs (4j, 4j+1) cross the index/batch
+        # split, pairs (4j+2, 4j+3) lie inside the batch.
+        "incremental": lambda: D.incremental_near_dedup(
+            corpus.filter("doc_id % 4 != 0"),
+            D.build_band_index(corpus.filter("doc_id % 4 = 0"), "doc_id", "text"),
+            "doc_id",
+            "text",
+            threshold=0.5,
+        ),
+    }
+    default = {name: rows(f()) for name, f in calls.items()}
+    assert all(default.values()), default
+    with reliable_pins():
+        reliable = {name: rows(f()) for name, f in calls.items()}
+    assert reliable == default
 
 
 def test_dedup_rate_by_source_conservation(spark, sf_dir):

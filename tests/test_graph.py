@@ -317,18 +317,16 @@ def test_clustering_coefficient_hand_graph(spark):
     assert lcc == {"a": 3333, "b": 10000, "c": 10000, "d": 0}
 
 
-def test_graph_checkpoint_dir_output_equality(spark, ckpt_root):
-    """checkpoint_dir plumbing (VERDICT r08 item #5, mirroring the dedup
-    family's r07 fix): every iterative graph fixpoint must produce exactly
-    the localCheckpoint-mode rows when pinning to reliable storage — the
-    executor-loss-safe path on a real cluster. One representative per
-    fixpoint shape: mass propagation (pagerank, personalized), frontier
-    expansion (bfs), relaxation (sssp), peeling (kcore), label convergence
-    (lpa, star-CC), mutual recursion (hits), and the join-based
-    triangle counter's pinned intermediates."""
+def test_graph_checkpoint_dir_output_equality(spark, reliable_pins):
+    """With ``spark.checkpoint.dir`` set, every iterative graph fixpoint
+    must produce exactly the local-checkpoint-mode rows — the
+    executor-loss-safe deployment on a real cluster. One representative
+    per fixpoint shape: mass propagation (pagerank, personalized),
+    frontier expansion (bfs), relaxation (sssp), peeling (kcore), label
+    convergence (lpa, star-CC), mutual recursion (hits), and the
+    join-based triangle counter's pinned intermediates."""
     from app_insights_generator_spark.operators import graph as G
 
-    ckpt = ckpt_root  # shared session root: see conftest.ckpt_root
     edges = [
         ("a", "b"), ("b", "a"), ("b", "c"), ("c", "d"),
         ("d", "a"), ("d", "b"), ("d", "c"), ("a", "c"),
@@ -344,26 +342,18 @@ def test_graph_checkpoint_dir_output_equality(spark, ckpt_root):
     def rows(d):
         return sorted(map(tuple, d.collect()))
 
-    assert rows(G.pagerank(df)) == rows(G.pagerank(df, checkpoint_dir=ckpt))
-    assert rows(G.personalized_pagerank(df)) == rows(
-        G.personalized_pagerank(df, checkpoint_dir=ckpt)
-    )
-    assert rows(G.bfs_depths(df, srcs)) == rows(
-        G.bfs_depths(df, srcs, checkpoint_dir=ckpt)
-    )
-    assert rows(G.sssp(wdf, srcs)) == rows(
-        G.sssp(wdf, srcs, checkpoint_dir=ckpt)
-    )
-    assert rows(G.kcore_peel(df, k=2, rounds=3)) == rows(
-        G.kcore_peel(df, k=2, rounds=3, checkpoint_dir=ckpt)
-    )
-    assert rows(G.label_propagation(df)) == rows(
-        G.label_propagation(df, checkpoint_dir=ckpt)
-    )
-    assert rows(G.triangle_counts(df)) == rows(
-        G.triangle_counts(df, checkpoint_dir=ckpt)
-    )
-    assert rows(G.hits(df)) == rows(G.hits(df, checkpoint_dir=ckpt))
-    assert rows(G.connected_components_star(iedges, ids, "doc_id")) == rows(
-        G.connected_components_star(iedges, ids, "doc_id", checkpoint_dir=ckpt)
-    )
+    calls = {
+        "pagerank": lambda: G.pagerank(df),
+        "personalized": lambda: G.personalized_pagerank(df),
+        "bfs": lambda: G.bfs_depths(df, srcs),
+        "sssp": lambda: G.sssp(wdf, srcs),
+        "kcore": lambda: G.kcore_peel(df, k=2, rounds=3),
+        "lpa": lambda: G.label_propagation(df),
+        "triangles": lambda: G.triangle_counts(df),
+        "hits": lambda: G.hits(df),
+        "star_cc": lambda: G.connected_components_star(iedges, ids, "doc_id"),
+    }
+    default = {name: rows(f()) for name, f in calls.items()}
+    with reliable_pins():
+        reliable = {name: rows(f()) for name, f in calls.items()}
+    assert reliable == default

@@ -450,27 +450,29 @@ def test_knn_label_accuracy_matches_numpy(spark, sf_dir):
     assert sum(n for n, _ in got.values()) == len(rows)
 
 
-def test_kmeans_checkpoint_dir_output_equality(spark, ckpt_root):
-    """checkpoint_dir on the distributed Lloyd loop and the k-means||
-    seeder (VERDICT r08 item #5): reliable-storage pins must be
-    output-identical to the default localCheckpoint mode."""
+def test_kmeans_checkpoint_dir_output_equality(spark, sf_dir, reliable_pins):
+    """The distributed Lloyd loop and the k-means|| seeder pin every
+    round: with ``spark.checkpoint.dir`` set, those reliable pins must be
+    output-identical to the default local-checkpoint mode."""
     from app_insights_generator_spark.operators.similarity import (
         kmeans_fixed_point,
         kmeans_parallel_init,
     )
 
-    ckpt = ckpt_root  # shared session root: see conftest.ckpt_root
-    embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
-    a_local, c_local = kmeans_fixed_point(embs, k=4, n_iter=2)
-    a_rel, c_rel = kmeans_fixed_point(embs, k=4, n_iter=2, checkpoint_dir=ckpt)
-    key = lambda r: tuple(r)  # noqa: E731
-    assert sorted(map(key, a_local.collect())) == sorted(map(key, a_rel.collect()))
-    assert sorted(map(key, c_local.collect())) == sorted(map(key, c_rel.collect()))
+    def rows(d):
+        return sorted(map(tuple, d.collect()))
 
-    s_local = kmeans_parallel_init(embs, k=4, rounds=2)
-    s_rel = kmeans_parallel_init(embs, k=4, rounds=2, checkpoint_dir=ckpt)
-    assert sorted(map(key, s_local.collect())) == sorted(map(key, s_rel.collect()))
+    def run():
+        assign, cent = kmeans_fixed_point(embs, k=4, n_iter=2)
+        seeds = kmeans_parallel_init(embs, k=4, rounds=2)
+        return rows(assign), rows(cent), rows(seeds)
+
+    default = run()
+    with reliable_pins():
+        reliable = run()
+    assert reliable == default
 
 
 def test_semdedup_empty_input_preserves_id_type(spark):
@@ -489,38 +491,6 @@ def test_semdedup_empty_input_preserves_id_type(spark):
     empty_long = spark.createDataFrame([], "vec_id long, embedding array<float>")
     out2 = semdedup_flags(empty_long, sign_dims=(1,))
     assert out2.schema["vec_id"].dataType.simpleString() == "bigint"
-
-
-def test_pin_conflicting_checkpoint_dir_warns_and_keeps_session_dir(
-    spark, tmp_path, ckpt_root
-):
-    """ADVICE r08: two operators passing different checkpoint_dir values
-    in one session must NOT silently redirect each other's reliable
-    checkpoints — the second caller gets a warning and the session keeps
-    its original dir. This is the ONE test allowed to trip that warning
-    (pyproject escalates it to an error elsewhere — VERDICT r09 item 5);
-    it seeds with the suite-shared ckpt_root so it can never itself
-    poison the session dir for later checkpoint tests."""
-    import warnings
-
-    from app_insights_generator_spark.operators.checkpointing import pin
-
-    df = spark.range(3)
-    pin(df, ckpt_root)  # sets the session dir iff unset (earlier tests may have)
-    session_dir = spark.sparkContext._jsc.sc().getCheckpointDir().get()
-
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        out = pin(df, str(tmp_path / "conflicting_ckpt"))
-        assert out.count() == 3  # checkpoint still succeeds, to the session dir
-    assert any("checkpoint dir already" in str(w.message) for w in caught)
-    assert spark.sparkContext._jsc.sc().getCheckpointDir().get() == session_dir
-
-    # same-root repeat is a silent no-op
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        pin(df, session_dir)
-    assert not [w for w in caught if "checkpoint dir" in str(w.message)]
 
 
 def test_sparse_dense_agreement_invariants(spark, sf_dir):

@@ -122,28 +122,20 @@ def test_apriori_prunes_with_biting_threshold(spark, orders_prepared):
     assert native == apriori
 
 
-def test_reliable_checkpoint_dir_matches_default(spark, orders_prepared, ckpt_root):
-    # checkpoint_dir switches the result pin from executor-local
-    # localCheckpoint to a reliable-storage checkpoint (the cluster
-    # deployment mode); output must be identical either way. Both sweeps
-    # use small chunk sizes so the pin path actually executes.
+def test_reliable_checkpoint_dir_matches_default(spark, orders_prepared, reliable_pins):
+    # With spark.checkpoint.dir set, the result pin is a reliable-storage
+    # checkpoint instead of an executor-local one (the cluster deployment
+    # mode); output must be identical either way. Both sweeps use small
+    # chunk sizes so the pin path actually executes.
     from app_insights_generator_spark.operators.sweep import sweep_apriori
 
     default = _insights_multiset(
         sweep_grouping_sets(orders_prepared, ORDERS_CFG, expand_batch_size=3)
     )
-    reliable = _insights_multiset(
-        sweep_grouping_sets(
-            orders_prepared,
-            ORDERS_CFG,
-            expand_batch_size=3,
-            checkpoint_dir=ckpt_root,
+    with reliable_pins():
+        reliable = _insights_multiset(
+            sweep_grouping_sets(orders_prepared, ORDERS_CFG, expand_batch_size=3)
         )
-    )
+        apriori_reliable = _insights_multiset(sweep_apriori(orders_prepared, ORDERS_CFG))
     assert default == reliable
-    apriori_reliable = _insights_multiset(
-        sweep_apriori(
-            orders_prepared, ORDERS_CFG, checkpoint_dir=ckpt_root
-        )
-    )
     assert default == apriori_reliable
