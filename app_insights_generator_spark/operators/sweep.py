@@ -9,11 +9,15 @@ Two modes with identical output semantics:
   mode; O(2^n) passes over the input.
 
 - ``sweep_grouping_sets`` — the Spark-native rewrite (SURVEY.md §4.3): ONE
-  aggregation using ``cube``/``groupingSets`` + ``grouping_id`` with the
-  reference's per-set semantics reproduced by post-filters:
-    * rows whose grouped column is NULL are dropped per set (equals the
-      reference's pre-agg isNotNull filter, main.py:288)
-    * the grand-total set (nothing grouped) is excluded (ref sweeps k>=1)
+  aggregation using ``cube``/``groupingSets``. Only wanted sets reach the
+  post-filter: the chunked path enumerates exactly the sets of size
+  1..max_combo_size, and the cube path drops the grand total (the reference
+  sweeps k>=1) with one ``grouping_id`` comparison. The post-filter
+  (``_keep``) is the threshold plus per-set NULL rejection (== the
+  reference's pre-agg isNotNull, main.py:288). It does no arithmetic over
+  the grouping flags: ``PruneFilters`` infers constraints from it through
+  the Expand, and a sum of 14 ``CASE WHEN`` flag terms cost 4-9 s of
+  planning per 105-set sweep (tests/test_playstore_fidelity.py guards it).
   Scale design: before the cube, the input is PRE-AGGREGATED to one row per
   distinct key tuple (bucketing collapses cardinality enormously at 100 TB),
   so the Expand operator's 2^n fan-out applies to the distinct-tuple table,
@@ -172,6 +176,35 @@ def _adaptive_chunk_size(expand_rows: int) -> int:
     return 40 if expand_rows > 150_000 else 256
 
 
+def _keep(cols: Sequence[str], t: int) -> Column:
+    """Per-set output predicate over a grouping-sets aggregate: the group
+    reaches the threshold ``t`` and none of its grouped columns is NULL
+    (``_g{i} == 1`` means column i is not in the row's set). One comparison
+    per column and nothing summed over the flags, so Catalyst's constraint
+    inference stays cheap (see the module docstring)."""
+    keep = F.col("count") >= F.lit(t)
+    for i, c in enumerate(cols):
+        keep = keep & ((F.col(f"_g{i}") == 1) | qcol(c).isNotNull())
+    return keep
+
+
+def _render(g: DataFrame, cols: Sequence[str], cfg: InsightsConfig) -> DataFrame:
+    """One Insights string per row, fields in the reference's order
+    (main.py:292-312): non-ID grouping cols, the ID cols' display cols, the
+    bare count. Columns outside the row's set render NULL; concat_ws skips
+    them."""
+    active = {c: F.col(f"_g{i}") == 0 for i, c in enumerate(cols)}
+    fields = [F.when(active[c], format_value(c, cfg)) for c in cols if c not in cfg.id_cols]
+    fields += [
+        F.when(active[c], format_value(v, cfg))
+        for c in cols
+        if c in cfg.id_cols
+        for v in cfg.id_to_value[c]
+    ]
+    fields.append(F.col("count"))
+    return g.select(F.concat_ws(INSIGHT_DELIM, *fields).alias("Insights"))
+
+
 def sweep_grouping_sets(
     df: DataFrame,
     cfg: InsightsConfig,
@@ -196,8 +229,7 @@ def sweep_grouping_sets(
     """
     cols = list(cols or cfg.agg_cols)
 
-    ids_in_cols = [c for c in cols if c in cfg.id_cols]
-    display = [v for c in ids_in_cols for v in cfg.id_to_value[c]]
+    display = [v for c in cols if c in cfg.id_cols for v in cfg.id_to_value[c]]
 
     if _base is not None:
         preaggregate = True
@@ -235,12 +267,17 @@ def sweep_grouping_sets(
     persisted_base = counted_from_base or _base is not None
     interp_small = False
     if expand_batch_size is None and max_size >= len(cols):
-        grouped = [base.cube(*key_cols).agg(*aggs)]
+        # The grand total (every column grouped out) has grouping_id 2^n - 1.
+        grouped = [
+            base.cube(*key_cols)
+            .agg(*aggs, F.grouping_id().alias("_gid"))
+            .filter(F.col("_gid") != 2 ** len(cols) - 1)
+        ]
     else:
-        # With a combo-size cap, enumerate ONLY the wanted sets: a full cube
-        # would Expand 2^n sets and post-filter (2^14 = 16,384 for the
-        # capped-at-2 Play-Store config wanting 105 — a ~150x wasted
-        # fan-out). Chunk to stay on the Expand codegen fast path.
+        # With a combo-size cap, enumerate ONLY the wanted sets, so no set
+        # needs filtering out: a full cube would Expand 2^n sets (2^14 =
+        # 16,384 for the capped-at-2 Play-Store config wanting 105 — a ~150x
+        # wasted fan-out). Chunk to stay on the Expand codegen fast path.
         sets = [list(c) for c in all_combinations(cfg, cols)]
         if expand_batch_size in (None, "auto"):
             # Chunk by what Expand multiplies: the pre-aggregated tuple
@@ -258,17 +295,14 @@ def sweep_grouping_sets(
             # Several jobs will scan the pre-aggregated table; pay it once.
             base = base.persist()
             persisted_base = True
-        # Chunked exhaustive sweeps evaluate interpreted when BOTH hold
-        # (round 13, extending the round-12 bailout finding to the direct
-        # chunked path): total Expand volume under the cap (same constant
-        # as the bailout) AND chunks past the ~40-set Expand codegen
-        # cliff, where generated per-row code is slower than interpreted
-        # eval AND each chunk compiles a fresh many-projection class.
-        # Order-balanced warm A/B on the sf0.01 1,023-set exhaustive cube
-        # (256-set chunks): 28.6/25.5/28.2s codegen -> 25.5/25.6/26.5s
-        # interpreted, plus a ~1.35x first-run win; <=40-set chunks (the
-        # Apriori levels) measured FASTER compiled and stay codegen.
-        # Only decidable when the tuple count is known (auto mode).
+        # Evaluate interpreted when the total Expand volume is under the
+        # bailout's cap AND chunks are past the ~40-set Expand codegen
+        # cliff, where generated per-row code is slower and each chunk
+        # compiles a fresh many-projection class (sf0.01 1,023-set cube,
+        # 256-set chunks, order-balanced: 28.6/25.5/28.2s codegen ->
+        # 25.5/25.6/26.5s interpreted). <=40-set chunks (the Apriori
+        # levels) measured faster compiled. Only decidable when the tuple
+        # count is known (auto mode).
         interp_small = (
             preaggregate
             and expand_batch_size in (None, "auto")
@@ -282,31 +316,7 @@ def sweep_grouping_sets(
             )
         ]
 
-    def finish(g: DataFrame) -> DataFrame:
-        active: dict[str, Column] = {c: F.col(f"_g{i}") == 0 for i, c in enumerate(cols)}
-        # Per-set null-rejection (== reference pre-agg isNotNull, main.py:288)
-        keep = F.lit(True)
-        for c in cols:
-            keep = keep & (~active[c] | qcol(c).isNotNull())
-        n_active = None
-        for c in cols:
-            term = F.when(active[c], 1).otherwise(0)
-            n_active = term if n_active is None else (n_active + term)
-        keep = keep & (n_active >= 1) & (n_active <= max_size)
-        keep = keep & (F.col("count") >= F.lit(t))
-
-        # Field order == reference: non-ID grouping cols in cols order,
-        # then display cols, then the bare count (main.py:292-312).
-        fields = [
-            F.when(active[c], format_value(c, cfg)) for c in cols if c not in cfg.id_cols
-        ]
-        for id_col in ids_in_cols:
-            for v in cfg.id_to_value[id_col]:
-                fields.append(F.when(active[id_col], format_value(v, cfg)))
-        fields.append(F.col("count"))
-        return g.filter(keep).select(F.concat_ws(INSIGHT_DELIM, *fields).alias("Insights"))
-
-    result = union_all([finish(g) for g in grouped])
+    result = union_all([_render(g.filter(_keep(cols, t)), cols, cfg) for g in grouped])
     if persisted_base:
         # Materialize once (the thresholded output is tiny next to the
         # input), then release the cached pre-aggregation — otherwise every
@@ -369,8 +379,7 @@ def sweep_apriori(
     cols = list(cols or cfg.agg_cols)
     max_size = cfg.max_combo_size or len(cols)
 
-    ids_in_cols = [c for c in cols if c in cfg.id_cols]
-    display = [v for c in ids_in_cols for v in cfg.id_to_value[c]]
+    display = [v for c in cols if c in cfg.id_cols for v in cfg.id_to_value[c]]
 
     base = _preaggregate(df, cols, display).persist()
     # Threshold denominator from the persisted pre-aggregation, not a
@@ -438,22 +447,8 @@ def sweep_apriori(
             g = base.groupingSets(
                 [[qcol(c) for c in s] for s in chunk], *key_cols
             ).agg(*aggs)
-            keep = F.col("count") >= F.lit(t)
-            for j, c in enumerate(cols):
-                keep = keep & ((F.col(f"_g{j}") == 1) | qcol(c).isNotNull())
-            out.append(g.filter(keep).persist())
+            out.append(g.filter(_keep(cols, t)).persist())
         return out
-
-    def formatted(g: DataFrame) -> DataFrame:
-        active = {c: F.col(f"_g{i}") == 0 for i, c in enumerate(cols)}
-        fields = [
-            F.when(active[c], format_value(c, cfg)) for c in cols if c not in cfg.id_cols
-        ]
-        for id_col in ids_in_cols:
-            for v in cfg.id_to_value[id_col]:
-                fields.append(F.when(active[id_col], format_value(v, cfg)))
-        fields.append(F.col("count"))
-        return g.select(F.concat_ws(INSIGHT_DELIM, *fields).alias("Insights"))
 
     out: list[DataFrame] = []
     persisted: list[DataFrame] = []
@@ -490,7 +485,7 @@ def sweep_apriori(
             frozenset(c for i, c in enumerate(cols) if row[f"_g{i}"] == 0)
             for row in flag_rows
         }
-        out.extend(formatted(g) for g in chunks)
+        out.extend(_render(g, cols, cfg) for g in chunks)
         prev = {frozenset(s) for s in current if frozenset(s) in survivors}
         if level_stats is not None:
             level_stats.append(

@@ -14,11 +14,13 @@ from __future__ import annotations
 import dataclasses
 import random
 import re
+import time
 from collections import Counter
 
 import pytest
 
 from app_insights_generator_spark.config import PLAYSTORE_CONFIG
+from app_insights_generator_spark.operators import checkpointing
 from app_insights_generator_spark.operators.insights import prepare
 from app_insights_generator_spark.operators.sweep import (
     sweep_apriori,
@@ -132,3 +134,38 @@ def test_playstore_null_display_vanishes(mode_outputs):
     assert all(
         "developer=" not in ln.replace("developerWebsite=", "") for ln in dev_null_lines
     )
+
+
+def _filter_conditions(plan):
+    """Condition strings of every Filter node in a JVM logical plan."""
+    if plan.nodeName() == "Filter":
+        yield plan.condition().toString()
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _filter_conditions(children.apply(i))
+
+
+def test_native_sweep_filter_is_cheap_to_plan(apps_bucketed, monkeypatch):
+    # The 105-set sweep's post-filter must stay free of per-row arithmetic
+    # over the grouping flags: Catalyst's PruneFilters infers constraints
+    # from it through the Expand, and a sum of CASE WHEN flag terms made
+    # optimizing this one plan take 4-9 s on a 4-core box (under 0.2 s
+    # without). The sweep resolves checkpointing.pin at call time, so the
+    # spy sees the exact DataFrame it pins, before anything optimizes it.
+    real_pin = checkpointing.pin
+    seen = []
+
+    def spy(df):
+        qe = df._jdf.queryExecution()
+        t0 = time.perf_counter()
+        qe.optimizedPlan()
+        seen.append((qe.analyzed(), time.perf_counter() - t0))
+        return real_pin(df)
+
+    monkeypatch.setattr(checkpointing, "pin", spy)
+    sweep_grouping_sets(apps_bucketed, CFG, total_count=apps_bucketed.count())
+    [(analyzed, optimize_s)] = seen
+    conditions = list(_filter_conditions(analyzed))
+    assert conditions
+    assert not any("CASE WHEN" in c for c in conditions), conditions
+    assert optimize_s < 2.0, f"optimizing the sweep plan took {optimize_s:.2f}s"

@@ -6,8 +6,10 @@ from collections import Counter
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from app_insights_generator_spark.config import InsightsConfig
-from app_insights_generator_spark.operators.insights import prepare
+from app_insights_generator_spark.operators.insights import prepare, threshold_count
 from app_insights_generator_spark.operators.sweep import (
     all_combinations,
     sweep_grouping_sets,
@@ -83,8 +85,6 @@ def test_max_combo_size(spark, orders_prepared):
 def test_id_columns_in_sweep(spark, sf_dir):
     # ID->display resolution inside the sweep: o_orderstatus as a fake ID
     # column whose "display" is itself duplicated via a projection.
-    from pyspark.sql import functions as F
-
     df = load_table(spark, sf_dir, "orders").withColumn(
         "status_name", F.concat(F.lit("S_"), F.col("o_orderstatus"))
     )
@@ -139,3 +139,20 @@ def test_reliable_checkpoint_dir_matches_default(spark, orders_prepared, reliabl
         apriori_reliable = _insights_multiset(sweep_apriori(orders_prepared, ORDERS_CFG))
     assert default == reliable
     assert default == apriori_reliable
+
+
+def test_cube_drops_grand_total_when_threshold_floors_to_zero(spark, orders_prepared):
+    # Under 50 rows the 2% threshold floors to T=0 (SURVEY.md §7 risk 3), so
+    # the grand-total row would pass it: the cube branch must drop it by
+    # grouping_id, both when called directly and in sweep_apriori's
+    # exhaustive bailout over its own pre-aggregation (_base).
+    from app_insights_generator_spark.operators.sweep import sweep_apriori
+
+    small = orders_prepared.filter(F.col("o_orderkey") <= 40)
+    n = small.count()
+    assert n > 0 and threshold_count(ORDERS_CFG, n) == 0
+    loop = _insights_multiset(sweep_loop_df(small, ORDERS_CFG))
+    for mode in (sweep_grouping_sets, sweep_apriori):
+        native = _insights_multiset(mode(small, ORDERS_CFG))
+        assert native == loop
+        assert all("=" in line for line in native)

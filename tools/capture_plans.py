@@ -1,15 +1,22 @@
 """Capture .explain("formatted") for bench HEADLINE queries (and any -k
-extras) into plans/r12/<query>_<tag>.txt — the optimization round's
-before/after plan evidence (guide §1: measure first; §7.2: read the plan).
+extras) into plans/r12/<query>_<tag>.txt, followed by the Catalyst cost of
+building the query:
 
-Note: queries that eagerly pin their result (localCheckpoint — the sweep
-family) or run plan-assertion side effects (bucketed join) execute real
-work during plan construction; their final explain shows a Scan
-ExistingRDD over the pinned result. For those, the interesting plan is
-the upstream subtree, which test_plans.py guards separately; the capture
-still records the executed shape (number of jobs is visible in the code).
+- the phase times (analysis / optimization / planning) of the final
+  DataFrame, from ``queryExecution().tracker().phases()``;
+- the top 5 analyzer/optimizer rules by time, from the JVM-wide
+  ``RuleExecutor`` metrics reset before the query is built and dumped
+  after its explain.
 
-    python tools/capture_plans.py --tag before [--sf /root/testdata/sf0.1] [-k name,name]
+Queries that eagerly pin their result (the sweep family) or run
+plan-assertion side effects (bucketed join) execute real work while the
+query is built; their final explain shows a Scan ExistingRDD over the
+pinned result, so their phase times are those of that scan. The rule
+times still cover every plan optimized during the build, the pinned
+subtree's included — that is where a planner blow-up in a sweep shows.
+test_plans.py guards the upstream subtrees separately.
+
+    python tools/capture_plans.py --tag before [--sf DIR] [-k name,name]
 """
 
 from __future__ import annotations
@@ -24,6 +31,28 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from app_insights_generator_spark.session import get_spark
 from app_insights_generator_spark.queries import QUERIES
+
+
+def catalyst_report(spark, df) -> str:
+    """Phase times of ``df`` and the top 5 rules since the last
+    ``RuleExecutor.resetMetrics()``, as text."""
+    jvm = spark._jvm
+    phases = jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        df._jdf.queryExecution().tracker().phases()
+    )
+    lines = ["== Catalyst phases (ms) =="]
+    lines += [f"{name}: {phases[name].durationMs()}" for name in sorted(phases)]
+    # dumpTimeSpent rows: <rule> <effective ns> / <total ns> <effective runs> / <runs>
+    rules = []
+    dump = jvm.org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent()
+    for row in dump.splitlines():
+        f = row.split()
+        if len(f) == 7 and f[2] == "/" and f[3].isdigit():
+            rules.append((int(f[3]), f[0], f[6]))
+    lines.append("== Top 5 rules by time (ms, runs) ==")
+    top = sorted(rules, reverse=True)[:5]
+    lines += [f"{name}: {ns / 1e6:.1f} ms, {runs} runs" for ns, name, runs in top]
+    return "\n".join(lines) + "\n"
 
 
 def main() -> None:
@@ -43,6 +72,7 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
 
     spark = get_spark(app_name="capture-plans")
+    rule_executor = spark._jvm.org.apache.spark.sql.catalyst.rules.RuleExecutor
     for name in names:
         fn = QUERIES.get(name) or bench._EXTRA.get(name)
         if fn is None:
@@ -50,11 +80,12 @@ def main() -> None:
             continue
         spark.sparkContext.setJobDescription(f"plan: {name}")
         try:
+            rule_executor.resetMetrics()
             df = fn(spark, args.sf)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            text = buf.getvalue()
+            text = buf.getvalue() + "\n" + catalyst_report(spark, df)
         except Exception as e:  # record the failure instead of dying mid-list
             text = f"EXPLAIN FAILED: {e!r}\n"
         path = os.path.join(outdir, f"{name}_{args.tag}.txt")
