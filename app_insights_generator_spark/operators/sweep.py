@@ -1,6 +1,6 @@
 """Combination sweep: all 2^n - 1 grouping sets over the insight columns.
 
-Two modes with identical output semantics:
+Three modes with identical output semantics:
 
 - ``sweep_loop`` — faithful port of the reference's Python combination loop
   (get_insights_from_df_with_possible_combinations_parallely,
@@ -8,22 +8,41 @@ Two modes with identical output semantics:
   aggregation subtrees unioned into one job. Kept as the golden-fidelity
   mode; O(2^n) passes over the input.
 
-- ``sweep_grouping_sets`` — the Spark-native rewrite (SURVEY.md §4.3): ONE
-  aggregation using ``cube``/``groupingSets``. Only wanted sets reach the
-  post-filter: the chunked path enumerates exactly the sets of size
-  1..max_combo_size, and the cube path drops the grand total (the reference
-  sweeps k>=1) with one ``grouping_id`` comparison. The post-filter
-  (``_keep``) is the threshold plus per-set NULL rejection (== the
-  reference's pre-agg isNotNull, main.py:288). It does no arithmetic over
-  the grouping flags: ``PruneFilters`` infers constraints from it through
-  the Expand, and a sum of 14 ``CASE WHEN`` flag terms cost 4-9 s of
-  planning per 105-set sweep (tests/test_playstore_fidelity.py guards it).
-  Scale design: before the cube, the input is PRE-AGGREGATED to one row per
-  distinct key tuple (bucketing collapses cardinality enormously at 100 TB),
-  so the Expand operator's 2^n fan-out applies to the distinct-tuple table,
-  not the raw rows. count = sum of pre-counts, min(display) = min of
-  pre-mins. ``expand_batch_size`` additionally splits the grouping sets into
-  chunks so each job's Expand factor is bounded.
+- ``sweep_grouping_sets`` — the Spark-native rewrite (SURVEY.md §4.3): the
+  input is PRE-AGGREGATED to one row per distinct key tuple (the tuple
+  table; bucketing collapses cardinality enormously at 100 TB), and every
+  wanted set is aggregated from it with ``cube``/``groupingSets``. The
+  Expand's fan-out then multiplies the tuple count, not the raw row count:
+  count = sum of pre-counts, min(display) = min of pre-mins.
+
+- ``sweep_apriori`` — level-wise with support pruning over the same tuple
+  table; when the whole lattice is small it runs the exhaustive plan below
+  instead.
+
+The exhaustive plan (``_exhaustive``) is picked from two facts only: the
+number of wanted sets and the tuple count. A sweep is *small* when
+tuples x sets <= 20M and sets <= 1,100.
+
+- More than 64 sets and small: ONE job with interpreted expression
+  evaluation. A many-set Expand emits one generated projection per set,
+  so Janino compilation, not execution, dominates small volumes: a
+  1,024-set cube over 2,550 tuples took 6.0 s compiled and 1.5 s
+  interpreted; the sf0.01 1,023-set wide cube (14.7k tuples) took
+  25.2-25.4 s as four compiled 256-set chunks and 17.7-19.2 s as one
+  interpreted job. At 63 sets compiled still wins (sf0.1 lineitem cube,
+  interpreting only the pin: 1.06-2.22 s compiled, 1.20-2.60 s
+  interpreted), hence the 64.
+- Otherwise compiled, in chunks of ``_adaptive_chunk_size(tuples)`` sets,
+  so no uncapped 16,383-set sweep becomes one 16k-projection plan.
+- A one-job sweep over all 2^n - 1 sets is spelled as a ``cube`` minus the
+  grand total (``grouping_id() == 2^n - 1``); any other job enumerates
+  exactly its sets with ``groupingSets``, so no set needs filtering out.
+
+The post-filter (``_keep``) is the threshold plus per-set NULL rejection
+(== the reference's pre-agg isNotNull, main.py:288). It does no arithmetic
+over the grouping flags: ``PruneFilters`` infers constraints from it
+through the Expand, and a sum of 14 ``CASE WHEN`` flag terms cost 4-9 s of
+planning per 105-set sweep (tests/test_playstore_fidelity.py guards it).
 
 Both native sweeps pin their (tiny, thresholded) result so the caches
 feeding it can be released. The pin is ``checkpointing.pin``: a local
@@ -37,7 +56,6 @@ from __future__ import annotations
 
 import contextlib
 import itertools
-import time
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -54,17 +72,16 @@ from app_insights_generator_spark.operators.insights import (
 )
 
 
-#: Expand-output volume (tuples x grouping sets) below which interpreted
-#: expression evaluation beats whole-stage codegen for grouping-set jobs:
-#: a many-set Expand emits one generated projection per set, so Janino
-#: COMPILATION dominates small-volume jobs (round 12 thread dumps; synthetic
-#: 1,024-set cube over 2,550 rows: 6.0s codegen -> 1.5s interpreted).
-#: Shared by the sweep_apriori bailout (round 12) and the chunked exhaustive
-#: path (round 13 — order-balanced warm A/B on the sf0.01 1,023-set
-#: exhaustive cube: 28.6/25.5/28.2s -> 25.5/25.6/26.5s, cold ~1.35x). Both
-#: run >40-set chunks, past the Expand codegen cliff; the <=40-set Apriori
-#: level chunks measured FASTER compiled and deliberately stay on codegen.
+#: Expand-output volume (tuples x grouping sets) and set count up to which a
+#: sweep is small (see the module docstring).
 _INTERPRETED_VOLUME_CAP = 20_000_000
+_SMALL_MAX_SETS = 1_100
+#: Set count above which a small sweep runs as one interpreted job.
+_INTERPRETED_MIN_SETS = 64
+
+
+def _small(tuples: int, sets: int) -> bool:
+    return tuples * sets <= _INTERPRETED_VOLUME_CAP and sets <= _SMALL_MAX_SETS
 
 
 @contextlib.contextmanager
@@ -73,14 +90,10 @@ def _interpreted_eval(spark):
     (``codegen.factoryMode=NO_CODEGEN`` + ``wholeStage=false``), restoring
     the previous values on exit.
 
-    NOTE (ADVICE r12): these are SESSION-level SQL confs — any query
-    executing concurrently on the same SparkSession during the window also
-    runs interpreted, and overlapping toggles on one session can restore
-    each other's values out of order. The engine's entry points (driver
-    gate, bench, sweeps) run queries strictly sequentially per session, so
-    this is safe here; a concurrent-scheduler deployment should either run
-    sweeps on ``spark.newSession()`` (SQL confs are per-session) or take a
-    lock around the toggle."""
+    These are session-level SQL confs: a query running concurrently on the
+    same SparkSession during the window also runs interpreted, and
+    overlapping toggles can restore each other's values out of order. The
+    engine's entry points run queries one at a time per session."""
     prev_factory = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
     prev_wscg = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
@@ -142,38 +155,49 @@ def sweep_loop_df(
     return union_all(sweep_loop(df, cfg, cols, total_count, batch_size=1 << 20))
 
 
-def _preaggregate(df: DataFrame, cols: Sequence[str], display: Sequence[str]) -> DataFrame:
-    """Collapse the input to one row per distinct key tuple.
+def _display(cfg: InsightsConfig, cols: Sequence[str]) -> list[str]:
+    """Display columns of the ID columns among ``cols``, in sweep order."""
+    return [v for c in cols if c in cfg.id_cols for v in cfg.id_to_value[c]]
 
-    At 100 TB this is THE load-bearing step: the cube's Expand fan-out then
-    multiplies the distinct-tuple count (bounded by the product of bucket
-    cardinalities), not the raw row count. Shuffles once on all key columns.
-    """
+
+def _tuple_table(
+    df: DataFrame, cols: Sequence[str], display: Sequence[str]
+) -> tuple[DataFrame, int, int]:
+    """Collapse the input to one persisted row per distinct key tuple;
+    returns ``(table, rows, tuples)``: the table, the input's row count
+    (the sum of the per-tuple counts) and the tuple count, both from ONE
+    action. The input is scanned once, shuffling on all key columns, and
+    the threshold denominator needs no second pass over it."""
     aggs = [F.min(qcol(v)).alias(v) for v in display]
     aggs.append(F.count(F.lit(1)).alias("_pre_count"))
-    return df.groupBy(*[qcol(c) for c in cols]).agg(*aggs)
+    table = df.groupBy(*[qcol(c) for c in cols]).agg(*aggs).persist()
+    stats = table.agg(
+        F.sum("_pre_count").alias("rows"), F.count(F.lit(1)).alias("tuples")
+    ).collect()[0]
+    return table, stats["rows"] or 0, stats["tuples"]
 
 
-def _adaptive_chunk_size(expand_rows: int) -> int:
-    """Grouping sets per aggregation job, chosen by the volume the Expand
-    actually multiplies — the PRE-AGGREGATED distinct-tuple table's row
-    count, NOT the raw input count (round-4 fix: the 1,023-set sweep over
-    a compressible distribution pre-aggregates 600k raw rows to ~2.5k
-    tuples; keying the decision on the raw count picked 40-set chunks and
-    spent the whole sweep on ~26 jobs' fixed overhead per level — 38s vs
-    7s at sf0.1 after the fix).
+def _set_aggs(cols: Sequence[str], display: Sequence[str]) -> list[Column]:
+    """Per-set aggregates over the tuple table, plus one ``_g{i}`` grouping
+    flag per column."""
+    aggs = [F.min(qcol(v)).alias(v) for v in display]
+    aggs.append(F.sum("_pre_count").cast("long").alias("count"))
+    aggs.extend(F.grouping(qcol(c)).alias(f"_g{i}") for i, c in enumerate(cols))
+    return aggs
+
+
+def _adaptive_chunk_size(tuples: int) -> int:
+    """Grouping sets per compiled aggregation job, keyed on the tuple count
+    (what the Expand multiplies), not the raw row count.
 
     Two regimes, both measured on the 1,023-set wide sweep in fresh
     sessions: at 600k Expand-input rows 40-set chunks win (16.4s vs 24.0s
     with 256 — a wide Expand leaves the whole-stage-codegen fast path and
     the per-row penalty dominates); at 60k rows 256-set chunks win (15.7s
     vs 25.5s — each chunk's ~1s Janino compile dominates tiny data, so
-    fewer jobs beat faster rows). Crossover sits around 1-2e5 rows; at
-    100 TB a HIGH-cardinality pre-agg is in the 40-set regime, while a
-    compressible one stays in the few-big-chunks regime no matter how
-    large the raw input — the tuple table is what Expand sees.
+    fewer jobs beat faster rows). The crossover sits around 1-2e5 rows.
     """
-    return 40 if expand_rows > 150_000 else 256
+    return 40 if tuples > 150_000 else 256
 
 
 def _keep(cols: Sequence[str], t: int) -> Column:
@@ -205,129 +229,55 @@ def _render(g: DataFrame, cols: Sequence[str], cfg: InsightsConfig) -> DataFrame
     return g.select(F.concat_ws(INSIGHT_DELIM, *fields).alias("Insights"))
 
 
+def _exhaustive(
+    table: DataFrame, tuples: int, cols: Sequence[str], cfg: InsightsConfig, t: int
+) -> DataFrame:
+    """Every wanted set, aggregated from the persisted tuple table in the
+    plan the module docstring's rule picks; returns the pinned result and
+    releases the table."""
+    sets = [list(c) for c in all_combinations(cfg, cols)]
+    interpreted = len(sets) > _INTERPRETED_MIN_SETS and _small(tuples, len(sets))
+    size = len(sets) if interpreted else _adaptive_chunk_size(tuples)
+    key_cols = [qcol(c) for c in cols]
+    aggs = _set_aggs(cols, _display(cfg, cols))
+    if size >= len(sets) and len(sets) == 2 ** len(cols) - 1:
+        # The grand total (every column grouped out) has grouping_id 2^n - 1.
+        grouped = [
+            table.cube(*key_cols)
+            .agg(*aggs, F.grouping_id().alias("_gid"))
+            .filter(F.col("_gid") != 2 ** len(cols) - 1)
+        ]
+    else:
+        grouped = [
+            table.groupingSets([[qcol(c) for c in s] for s in sets[i : i + size]], *key_cols)
+            .agg(*aggs)
+            for i in range(0, len(sets), size)
+        ]
+    result = union_all([_render(g.filter(_keep(cols, t)), cols, cfg) for g in grouped])
+    try:
+        # Materialize once (the thresholded output is tiny next to the
+        # input), then release the table: otherwise every sweep in a
+        # long-lived session leaks its cache.
+        with _interpreted_eval(table.sparkSession) if interpreted else contextlib.nullcontext():
+            return checkpointing.pin(result)
+    finally:
+        table.unpersist()
+
+
 def sweep_grouping_sets(
     df: DataFrame,
     cfg: InsightsConfig,
     cols: Sequence[str] | None = None,
     total_count: int | None = None,
-    preaggregate: bool = True,
-    expand_batch_size: int | str | None = None,
-    _base: DataFrame | None = None,
 ) -> DataFrame:
     """Native mode -> DataFrame[Insights], semantics identical to sweep_loop.
 
-    ``expand_batch_size``: max grouping sets per aggregation job; None means
-    a single ``cube`` (fan-out 2^n) when no combo-size cap applies, and
-    ``"auto"`` picks the volume-adaptive chunk size (_adaptive_chunk_size).
-    With pre-aggregation on bucketed data the cube is usually fine for
-    n<=14; batching bounds worst-case memory.
-
-    ``_base``: an ALREADY-persisted pre-aggregated tuple table (the
-    _preaggregate shape, `_pre_count` included) — sweep_apriori hands its
-    own pre-agg over when it bails out to exhaustive mode, so the input is
-    never scanned twice. Implies ``preaggregate`` semantics.
-    """
+    ``total_count`` is the threshold denominator; by default it is the
+    input's row count, read off the tuple table."""
     cols = list(cols or cfg.agg_cols)
-
-    display = [v for c in cols if c in cfg.id_cols for v in cfg.id_to_value[c]]
-
-    if _base is not None:
-        preaggregate = True
-        base = _base
-    else:
-        base = _preaggregate(df, cols, display) if preaggregate else df
-    count_expr = F.sum("_pre_count") if preaggregate else F.count(F.lit(1))
-
-    # Threshold denominator: when no count is supplied, derive it from the
-    # persisted pre-aggregation (sum of per-tuple counts == raw row count)
-    # instead of a separate df.count() — that second action was a SECOND
-    # full pass over the raw input, the thing pre-aggregation exists to
-    # avoid. At 100 TB this halves the scan volume of the whole sweep.
-    counted_from_base = False
-    if total_count is None:
-        if preaggregate:
-            base = base.persist()
-            counted_from_base = True
-            total_count = (
-                base.agg(F.sum("_pre_count").alias("n")).collect()[0]["n"] or 0
-            )
-        else:
-            total_count = df.count()
-    t = threshold_count(cfg, total_count)
-
-    aggs = [F.min(qcol(v)).alias(v) for v in display]
-    aggs.append(count_expr.cast("long").alias("count"))
-    aggs.extend(F.grouping(qcol(c)).alias(f"_g{i}") for i, c in enumerate(cols))
-
-    max_size = cfg.max_combo_size or len(cols)
-    key_cols = [qcol(c) for c in cols]
-
-    # A caller-provided _base arrives persisted: pin the result and release
-    # the cache on the way out exactly as for a locally-persisted base.
-    persisted_base = counted_from_base or _base is not None
-    interp_small = False
-    if expand_batch_size is None and max_size >= len(cols):
-        # The grand total (every column grouped out) has grouping_id 2^n - 1.
-        grouped = [
-            base.cube(*key_cols)
-            .agg(*aggs, F.grouping_id().alias("_gid"))
-            .filter(F.col("_gid") != 2 ** len(cols) - 1)
-        ]
-    else:
-        # With a combo-size cap, enumerate ONLY the wanted sets, so no set
-        # needs filtering out: a full cube would Expand 2^n sets (2^14 =
-        # 16,384 for the capped-at-2 Play-Store config wanting 105 — a ~150x
-        # wasted fan-out). Chunk to stay on the Expand codegen fast path.
-        sets = [list(c) for c in all_combinations(cfg, cols)]
-        if expand_batch_size in (None, "auto"):
-            # Chunk by what Expand multiplies: the pre-aggregated tuple
-            # table (persist it first — the count below and every chunk
-            # job reuse it), falling back to the raw count when the
-            # caller disabled pre-aggregation.
-            if preaggregate and not persisted_base:
-                base = base.persist()
-                persisted_base = True
-            expand_rows = base.count() if preaggregate else total_count
-            chunk_size = _adaptive_chunk_size(expand_rows)
-        else:
-            chunk_size = expand_batch_size
-        if len(sets) > chunk_size and not persisted_base:
-            # Several jobs will scan the pre-aggregated table; pay it once.
-            base = base.persist()
-            persisted_base = True
-        # Evaluate interpreted when the total Expand volume is under the
-        # bailout's cap AND chunks are past the ~40-set Expand codegen
-        # cliff, where generated per-row code is slower and each chunk
-        # compiles a fresh many-projection class (sf0.01 1,023-set cube,
-        # 256-set chunks, order-balanced: 28.6/25.5/28.2s codegen ->
-        # 25.5/25.6/26.5s interpreted). <=40-set chunks (the Apriori
-        # levels) measured faster compiled. Only decidable when the tuple
-        # count is known (auto mode).
-        interp_small = (
-            preaggregate
-            and expand_batch_size in (None, "auto")
-            and chunk_size > 40
-            and expand_rows * len(sets) <= _INTERPRETED_VOLUME_CAP
-        )
-        grouped = [
-            base.groupingSets([[qcol(c) for c in s] for s in chunk], *key_cols).agg(*aggs)
-            for chunk in (
-                sets[i : i + chunk_size] for i in range(0, len(sets), chunk_size)
-            )
-        ]
-
-    result = union_all([_render(g.filter(_keep(cols, t)), cols, cfg) for g in grouped])
-    if persisted_base:
-        # Materialize once (the thresholded output is tiny next to the
-        # input), then release the cached pre-aggregation — otherwise every
-        # chunked sweep in a long-lived session leaks its cache.
-        if interp_small:
-            with _interpreted_eval(df.sparkSession):
-                result = checkpointing.pin(result)
-        else:
-            result = checkpointing.pin(result)
-        base.unpersist()
-    return result
+    table, rows, tuples = _tuple_table(df, cols, _display(cfg, cols))
+    t = threshold_count(cfg, rows if total_count is None else total_count)
+    return _exhaustive(table, tuples, cols, cfg, t)
 
 
 def sweep_apriori(
@@ -335,17 +285,9 @@ def sweep_apriori(
     cfg: InsightsConfig,
     cols: Sequence[str] | None = None,
     total_count: int | None = None,
-    max_sets_per_job: int | None = None,
-    level_stats: list[dict] | None = None,
 ) -> DataFrame:
     """Level-wise sweep with frequent-pattern (Apriori) pruning — output
     IDENTICAL to sweep_loop / sweep_grouping_sets.
-
-    ``level_stats``: pass a list to receive one dict per executed level
-    ({level, sets_evaluated, sets_survived, wall_sec}) — the pruning
-    telemetry a 16,383-set production run is tuned from. Note the stats
-    make the sweep EAGER per level (they already are: the survival bitmap
-    is collected each level regardless).
 
     The support threshold is anti-monotone: every group of column set
     S ∪ {c} is a subset of some group of S restricted to rows non-null in
@@ -358,93 +300,39 @@ def sweep_apriori(
     Scale story (the reference's 16,383-set workload at 100 TB): a 2%
     support threshold kills most multi-column sets after 2–3 levels, so the
     2^n sweep collapses to a handful of level jobs, each a groupingSets
-    aggregation over the pre-aggregated distinct-tuple table. Driver-side
-    data is only the per-set survival bitmap (<= sets-per-level rows).
-    Each level chunk is persisted — consumed twice (survival flags, final
-    union), and recomputation, not memory, is the expensive resource at
-    scale; every cache is released before returning, the final output
-    pinned by one eager pin of the (tiny, thresholded) result.
-    The survival flags of ALL chunks in a level are collected by a single
-    unioned action, so Spark runs the chunk aggregations concurrently —
-    level latency is the slowest chunk, not the chunk sum.
+    aggregation over the tuple table in chunks of ``_adaptive_chunk_size``
+    sets. Driver-side data is only the per-set survival bitmap (<=
+    sets-per-level rows). Each level chunk is persisted — consumed twice
+    (survival flags, final union), and recomputation, not memory, is the
+    expensive resource at scale; every cache is released before returning,
+    the final output pinned by one eager pin of the (tiny, thresholded)
+    result.
 
-    ``max_sets_per_job`` caps the grouping sets per aggregation job; None
-    picks the volume-adaptive size (_adaptive_chunk_size — 40 keeps big
-    inputs on the Expand codegen fast path, 256 amortizes per-chunk
-    compile cost on small ones). Measured (sf0.1, 363k distinct tuples): a
-    105-set Expand runs ~3x slower per row than a 40-set one — past
-    roughly 40 projection lists the generated Expand/aggregate code leaves
-    the JIT-compiled fast path.
+    When the whole lattice is small (module docstring), level-wise
+    iteration is pure overhead — ~n levels of (compile + job + survival
+    collect) to prune work that was already cheap — so the sweep runs the
+    exhaustive plan over the same tuple table instead. Pruned sets emit no
+    qualifying rows by anti-monotonicity, so the result is identical.
+    Measured (sf0.1, 1,023 sets, 2.5k tuples): 20.6s level-wise -> ~12s
+    exhaustive.
     """
     cols = list(cols or cfg.agg_cols)
     max_size = cfg.max_combo_size or len(cols)
+    display = _display(cfg, cols)
+    table, rows, tuples = _tuple_table(df, cols, display)
+    t = threshold_count(cfg, rows if total_count is None else total_count)
+    if _small(tuples, sum(1 for _ in all_combinations(cfg, cols))):
+        return _exhaustive(table, tuples, cols, cfg, t)
 
-    display = [v for c in cols if c in cfg.id_cols for v in cfg.id_to_value[c]]
-
-    base = _preaggregate(df, cols, display).persist()
-    # Threshold denominator from the persisted pre-aggregation, not a
-    # separate df.count() — the count action was a second full pass over
-    # the raw input (see sweep_grouping_sets). The denominator and the
-    # tuple count come from ONE action (round 12: the follow-up count()
-    # was a cached-scan job of its own — cheap, but pure per-job fixed
-    # cost at any scale).
-    stats_row = base.agg(
-        F.sum("_pre_count").alias("n"), F.count(F.lit(1)).alias("m")
-    ).collect()[0]
-    n_tuples = stats_row["m"]
-    if total_count is None:
-        total_count = stats_row["n"] or 0
-
-    # Exhaustive bailout for COMPRESSIBLE distributions: when the full
-    # lattice's Expand volume over the tuple table is trivial, level-wise
-    # iteration is pure overhead — ~n levels of (Janino compile + job +
-    # survival collect) to prune work that was already cheap. One
-    # exhaustive job computes the identical result (pruned sets emit no
-    # qualifying rows by anti-monotonicity, the threshold filter drops
-    # them). Caps: volume so the Expand output stays tiny, and set count
-    # so a 2^14 lattice can never generate a 16k-projection plan.
-    # Measured (sf0.1, 1,023 sets, 2.5k tuples): 20.6s level-wise ->
-    # ~12s exhaustive cube.
-    #
-    # The bailout job runs with INTERPRETED expression evaluation
-    # (round 12): thread dumps of the 1,024-set cube showed every worker
-    # inside org.codehaus.janino.UnitCompiler — a 2^n-list Expand
-    # generates one projection class per grouping set, blowing past the
-    # 100-entry codegen cache, so Janino COMPILATION, not execution,
-    # dominated the job (guide §7.3). Below the same 20M-row volume cap
-    # that already defines "trivial Expand output", interpreted eval is
-    # strictly cheaper than compiling (synthetic 1,024-set cube over
-    # 2,550 rows: 6.0s codegen -> 1.5s interpreted per run; the real
-    # lowcard sweep: 8.2s -> ~5s). Big-volume sweeps never enter this
-    # branch and keep whole-stage codegen, where per-row speed wins.
-    n_sets_full = sum(1 for _ in all_combinations(cfg, cols))
-    if n_tuples * n_sets_full <= _INTERPRETED_VOLUME_CAP and n_sets_full <= 1100:
-        with _interpreted_eval(df.sparkSession):
-            return sweep_grouping_sets(
-                df,
-                cfg,
-                cols,
-                total_count=total_count,
-                expand_batch_size=None,
-                _base=base,
-            )
-
-    if max_sets_per_job is None:
-        # Chunk by the pre-agg tuple count (what Expand multiplies), not
-        # the raw total: base is already persisted and materialized by the
-        # denominator action, so this count is a cached-scan no-op.
-        max_sets_per_job = _adaptive_chunk_size(n_tuples)
-    t = threshold_count(cfg, total_count)
+    chunk_size = _adaptive_chunk_size(tuples)
     key_cols = [qcol(c) for c in cols]
-    aggs = [F.min(qcol(v)).alias(v) for v in display]
-    aggs.append(F.sum("_pre_count").cast("long").alias("count"))
-    aggs.extend(F.grouping(qcol(c)).alias(f"_g{i}") for i, c in enumerate(cols))
+    aggs = _set_aggs(cols, display)
 
     def level_dfs(sets: list[tuple[str, ...]]) -> list[DataFrame]:
         out = []
-        for i in range(0, len(sets), max_sets_per_job):
-            chunk = sets[i : i + max_sets_per_job]
-            g = base.groupingSets(
+        for i in range(0, len(sets), chunk_size):
+            chunk = sets[i : i + chunk_size]
+            g = table.groupingSets(
                 [[qcol(c) for c in s] for s in chunk], *key_cols
             ).agg(*aggs)
             out.append(g.filter(_keep(cols, t)).persist())
@@ -455,26 +343,17 @@ def sweep_apriori(
     current: list[tuple[str, ...]] = [(c,) for c in cols]
     k = 1
     while current and k <= max_size:
-        level_t0 = time.time()
         chunks = level_dfs(current)
         persisted.extend(chunks)
         # Survival bitmap: which of this level's sets emitted >= 1 group.
         # ONE action for the whole level: unioning the per-chunk flag
         # projections makes Spark schedule every chunk's aggregation stage
-        # concurrently inside a single job (they share the persisted base),
-        # instead of running the <=40-set chunks back-to-back from the
-        # driver — the level's wall-clock becomes the slowest chunk, not
-        # the sum of chunks.
+        # concurrently inside a single job (they share the persisted table),
+        # so the level's wall-clock is the slowest chunk, not the sum.
         #
-        # Levels deliberately stay on CODEGEN (round 13, measured): the
-        # level chunks are <= ~40 grouping sets (the _adaptive_chunk_size
-        # high-card regime), which is on the Expand codegen fast path —
-        # order-balanced interleaved A/Bs of per-level interpreted eval
-        # read 1-2s SLOWER warm at sf0.1 (15.6/17.0/15.3 vs
-        # 15.0/14.4/13.6 even with only the tiny levels interpreted) for
-        # a first-run-only Janino saving. Interpreted eval pays only past
-        # the >40-set cliff — the exhaustive bailout and the chunked
-        # exhaustive path in sweep_grouping_sets, where it is applied.
+        # Levels run compiled: order-balanced A/Bs of interpreted levels
+        # at sf0.1 (40-set chunks) read 1-2s slower warm, for a saving on
+        # the first run's Janino compiles only.
         flag_rows = union_all(
             [
                 g.select(*[F.col(f"_g{i}") for i in range(len(cols))]).distinct()
@@ -487,15 +366,6 @@ def sweep_apriori(
         }
         out.extend(_render(g, cols, cfg) for g in chunks)
         prev = {frozenset(s) for s in current if frozenset(s) in survivors}
-        if level_stats is not None:
-            level_stats.append(
-                {
-                    "level": k,
-                    "sets_evaluated": len(current),
-                    "sets_survived": len(prev),
-                    "wall_sec": round(time.time() - level_t0, 3),
-                }
-            )
         cand = {
             s | {c}
             for s in prev
@@ -511,14 +381,14 @@ def sweep_apriori(
         )
         k += 1
     if not out:
-        base.unpersist()
+        table.unpersist()
         return df.sparkSession.createDataFrame([], "Insights string")
     # Materialize the final union from the still-cached level chunks, then
     # release every cache: the thresholded output is tiny next to the
     # input, and without this a long-lived session (the 100+-query oracle
     # gate, a notebook) accumulates one cached chunk per sweep.
     result = checkpointing.pin(union_all(out))
-    base.unpersist()
+    table.unpersist()
     for g in persisted:
         g.unpersist()
     return result

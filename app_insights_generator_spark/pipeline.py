@@ -1,18 +1,20 @@
 """End-to-end insights pipeline (reference extract_data, main.py:363-404).
 
 Flow parity: read CSV -> cast -> range-filter -> bucket -> repartition ->
-cache -> combination sweep -> write -> optional two-phase compaction merge
-(main.py:391-393) -> unpersist. Differences from the reference, on purpose:
+combination sweep -> write -> optional two-phase compaction merge
+(main.py:391-393). Differences from the reference, on purpose:
 
 - returns the FINAL insights DataFrame, not the raw input (the reference
   returns the pre-transform frame, main.py:404 — a vestigial surface);
-- ``mode="native"`` runs the sweep as one grouping-sets aggregation and a
-  single parallel write — no append batches, no compaction, no
-  ``coalesce(1)`` unless ``single_file`` is requested (the reference's
-  per-batch coalesce(1), main.py:358, is a single-task bottleneck at scale);
-- ``mode="loop"`` keeps the faithful shape: ≤128-combination batches
-  appended to ``<out>_partitioned`` with per-file headers, then re-read and
-  merged into the final CSV exactly like the reference.
+- ``mode="native"`` runs the sweep as grouping-sets aggregations over a
+  pre-aggregated tuple table and a single parallel write — no input cache,
+  no append batches, no compaction, no ``coalesce(1)`` unless
+  ``single_file`` is requested (the reference's per-batch coalesce(1),
+  main.py:358, is a single-task bottleneck at scale);
+- ``mode="loop"`` keeps the faithful shape: the input cached and counted
+  once, ≤128-combination batches appended to ``<out>_partitioned`` with
+  per-file headers, then re-read and merged into the final CSV exactly
+  like the reference.
 """
 
 from __future__ import annotations
@@ -45,31 +47,33 @@ def extract_data(
 ) -> DataFrame:
     """Run the full reference pipeline over a CSV; returns the insights
     DataFrame after writing ``output_path``."""
+    if mode not in ("native", "loop"):
+        raise ValueError(f"unknown mode {mode!r} (want 'native' or 'loop')")
     raw = read_csv(spark, csv_path, header=header, infer_schema=infer_schema, schema=schema)
     bucketed = prepare(raw, cfg)
     if num_partitions:
         # reference main.py:388; at scale prefer AQE coalescing instead
         bucketed = bucketed.repartition(num_partitions)
+    if mode == "native":
+        # The sweep's tuple table is its only pass over the input and
+        # supplies the threshold denominator, so nothing is cached here.
+        insights = sweep_grouping_sets(bucketed, cfg)
+        write_csv(insights, output_path, header=True, mode="overwrite",
+                  single_file=single_file)
+        return spark.read.option("header", True).csv(output_path)
     bucketed = bucketed.cache()
     try:
         total = bucketed.count()  # one shared threshold denominator (main.py:344)
-        if mode == "native":
-            insights = sweep_grouping_sets(bucketed, cfg, total_count=total)
-            write_csv(insights, output_path, header=True, mode="overwrite",
+        part_dir = f"{output_path}_partitioned"
+        batches = sweep_loop(bucketed, cfg, total_count=total, batch_size=batch_size)
+        for batch in batches:
+            # append + per-file header, reconciled on re-read (main.py:358, 392)
+            write_csv(batch, part_dir, header=True, mode="append",
                       single_file=single_file)
-            return spark.read.option("header", True).csv(output_path)
-        if mode == "loop":
-            part_dir = f"{output_path}_partitioned"
-            batches = sweep_loop(bucketed, cfg, total_count=total, batch_size=batch_size)
-            for batch in batches:
-                # append + per-file header, reconciled on re-read (main.py:358, 392)
-                write_csv(batch, part_dir, header=True, mode="append",
-                          single_file=single_file)
-            merged = spark.read.option("header", True).csv(part_dir)
-            write_csv(merged, output_path, header=True, mode="overwrite",
-                      single_file=single_file)
-            return spark.read.option("header", True).csv(output_path)
-        raise ValueError(f"unknown mode {mode!r} (want 'native' or 'loop')")
+        merged = spark.read.option("header", True).csv(part_dir)
+        write_csv(merged, output_path, header=True, mode="overwrite",
+                  single_file=single_file)
+        return spark.read.option("header", True).csv(output_path)
     finally:
         bucketed.unpersist()
 

@@ -110,8 +110,8 @@ def money_sum(expr, nd: int = 2) -> Column:
 # count per row (col*100 in double is within 1 ulp of the true integer,
 # ROUND recovers it; no half-way cases can occur), and SUM(bigint) is
 # exact, order-independent, and codegen'd. Measured at sf0.1 (median of
-# 5, tools/bench_money.py): decimal 0.78s, cents 0.48s, split-cents
-# 0.53s — value-IDENTICAL outputs on all variants.
+# 5, tools/bench_money.py, deleted after commit ddf6c42): decimal 0.78s,
+# cents 0.48s, split-cents 0.53s — value-IDENTICAL outputs on all variants.
 #
 # Overflow headroom: plain money sums are cents (<= ~9e16 dollars —
 # safe at any scale). Products (price x (1±frac)) are exact in 1e-4 /

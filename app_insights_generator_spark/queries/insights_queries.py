@@ -345,19 +345,16 @@ def insights_sweep_lineitem_wide_lowcard(spark: SparkSession, sf_dir: str) -> Da
 
 @register("insights_sweep_lineitem_wide_cube", _WIDE_ORACLE)
 def insights_sweep_lineitem_wide_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same 1,023-set sweep in EXHAUSTIVE mode (no Apriori pruning) as
-    volume-adaptively chunked grouping sets — the comparison point for the
-    pruned sweep. An unbatched single cube's 1,024-way Expand sits far past
-    the codegen cliff (measured: 40s vs 24s chunked at sf0.01); the Expand
-    trade-off numbers live in BASELINE.md (SURVEY.md §4.3). At sf0.1 the
-    exhaustive mode measures 270s vs the Apriori path's 13s — a 20x gap
-    from threshold pruning alone (1,023 -> 219 evaluated sets plus the
-    avoided shuffle volume of the doomed sets' groups), which is the
+    """Same 1,023-set sweep in EXHAUSTIVE mode (no Apriori pruning) — the
+    comparison point for the pruned sweep. The plan follows the sweep's one
+    rule (operators/sweep.py): at sf0.01 (14.7k tuples) the lattice is small,
+    so it runs as ONE interpreted cube; at sf0.1 (363k tuples) it runs as
+    compiled 40-set chunks and measures 270s vs the Apriori path's 13s — a
+    20x gap from threshold pruning alone (1,023 -> 219 evaluated sets plus
+    the avoided shuffle volume of the doomed sets' groups), which is the
     whole scale argument for level-wise pruning at the reference's
     16,383-set workload."""
-    return sweep_grouping_sets(
-        _lineitem_wide_base(spark, sf_dir), WIDE_CFG, expand_batch_size="auto"
-    )
+    return sweep_grouping_sets(_lineitem_wide_base(spark, sf_dir), WIDE_CFG)
 
 
 @register(

@@ -11,8 +11,11 @@ import pathlib
 
 import pytest
 
-from app_insights_generator_spark.operators import checkpointing, dedup, graph
+from app_insights_generator_spark.config import InsightsConfig
+from app_insights_generator_spark.operators import checkpointing, dedup, graph, sweep
+from app_insights_generator_spark.operators.insights import prepare
 from app_insights_generator_spark.queries import QUERIES
+from app_insights_generator_spark.sources import load_table
 
 PKG = pathlib.Path(checkpointing.__file__).resolve().parents[1]
 
@@ -87,6 +90,31 @@ def test_iterative_operators_job_counts(spark):
         "bfs": _job_count(sc, "pin_policy_bfs", lambda: graph.bfs_depths(edges, srcs)),
     }
     assert counts == {"dedup_cc": 37, "star_cc": 24, "bfs": 36}
+
+
+def test_sweep_apriori_bailout_job_count(spark, sf_dir):
+    """The Apriori sweep's exhaustive bailout reads the raw and tuple counts
+    from the one action that materializes its tuple table, then runs one
+    pinned job: no separate tuple count. Measured on orders at sf0.001 with
+    3 columns capped at pairs (6 sets): 6 jobs, AQE stage jobs included;
+    a second count of the table made it 8."""
+    cfg = InsightsConfig(
+        agg_cols=("o_orderstatus", "o_orderpriority", "o_totalprice"),
+        bucket_sizes={"o_totalprice": 100_000},
+        threshold_percent=2.0,
+        max_combo_size=2,
+    )
+    df = prepare(load_table(spark, sf_dir, "orders"), cfg).cache()
+    df.count()
+    try:
+        jobs = _job_count(
+            spark.sparkContext,
+            "pin_policy_sweep_bailout",
+            lambda: sweep.sweep_apriori(df, cfg),
+        )
+    finally:
+        df.unpersist()
+    assert jobs == 6
 
 
 # One registered query per query module that pins a fan-out intermediate.

@@ -90,25 +90,25 @@ def test_no_row_at_a_time_python_in_registered_queries(spark, sf_dir):
         assert "BatchEvalPython" not in plan, f"{name} uses row-at-a-time Python"
 
 
-def test_sweep_native_is_single_aggregation_over_preagg(spark, sf_dir):
+def test_sweep_native_is_single_aggregation_over_preagg(spark, sf_dir, monkeypatch):
     """The native sweep must pre-aggregate to distinct tuples before the
-    Expand: exactly two HashAggregate pairs (pre-agg + cube), and the
-    Expand sits above the pre-aggregation, not the raw scan.
+    Expand: the Expand sits above the pre-aggregation, not the raw scan.
 
-    Built directly with an explicit total_count: the registered query
-    derives the threshold denominator from the persisted pre-aggregation
-    and pins its result (lineage truncated), so the returned DataFrame no
-    longer exposes the sweep plan — this path runs the identical builder
-    without the persist/pin."""
-    from app_insights_generator_spark.operators.sweep import sweep_grouping_sets
-    from app_insights_generator_spark.queries.insights_queries import (
-        LINEITEM_CFG,
-        _lineitem_base,
-    )
+    The sweep pins its result (lineage truncated), so the plan is read from
+    a spy on ``checkpointing.pin``, which the sweep resolves at call time:
+    the spy sees the exact DataFrame the registered query pins."""
+    from app_insights_generator_spark.operators import checkpointing
 
-    df = _lineitem_base(spark, sf_dir)
-    swept = sweep_grouping_sets(df, LINEITEM_CFG, total_count=df.count())
-    plan = swept._jdf.queryExecution().executedPlan().toString()
+    real_pin = checkpointing.pin
+    plans = []
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_pin(df)
+
+    monkeypatch.setattr(checkpointing, "pin", spy)
+    QUERIES["insights_sweep_lineitem"](spark, sf_dir)
+    [plan] = plans
     assert "Expand" in plan
     scan_pos = plan.find("FileScan")
     expand_pos = plan.find("Expand")
