@@ -98,8 +98,29 @@ def minhash_signatures(
     return _signatures_from_sets(_shingle_sets(df, id_col, text_col, shingle_n), num_hashes)
 
 
-def _candidates_from_sets(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+def _band_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """[_id, band, bhash]: one row per document and band, ``bhash`` the
+    xxhash64 of the band's ``num_hashes // bands`` signature values."""
     rows = num_hashes // bands
+    return sig.select(
+        "_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(
+                            F.concat_ws(",", *[f"_m{b * rows + r}" for r in range(rows)])
+                        ).alias("bhash"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select("_id", "bk.band", "bk.bhash")
+
+
+def _candidates_from_sets(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     sig = _signatures_from_sets(sh, num_hashes)
     # Pairs come from an equi self-join over a PINNED narrow banded table.
     # Without the pin, the aliased self-join recomputes the 64-hash
@@ -119,26 +140,7 @@ def _candidates_from_sets(sh: DataFrame, num_hashes: int, bands: int) -> DataFra
     # 26.7s -> 12.2s, pair sets identical in both cases.
     # NULL-id guard replicates the old join's a._id < b._id semantics.
     banded = _shared_pin(
-        sig.select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                F.concat_ws(
-                                    ",", *[f"_m{b * rows + r}" for r in range(rows)]
-                                )
-                            ).alias("bhash"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        )
-        .select("_id", "bk.band", "bk.bhash")
-        .filter(F.col("_id").isNotNull())
+        _band_rows(sig, num_hashes, bands).filter(F.col("_id").isNotNull())
     )
     a = banded.select(F.col("_id").alias("id_a"), "band", "bhash")
     b = banded.select(F.col("_id").alias("id_b"), "band", "bhash")
@@ -420,24 +422,7 @@ def build_band_index(
     batch probes co-locate without shuffling the index side again.
     Returns [band, bhash, _id, _sh]."""
     sh = _shingle_sets(df, id_col, text_col, shingle_n)
-    rows = num_hashes // bands
-    sig = _signatures_from_sets(sh, num_hashes)
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(",", *[f"_m{b * rows + r}" for r in range(rows)])
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("_id", "bk.band", "bk.bhash")
+    banded = _band_rows(_signatures_from_sets(sh, num_hashes), num_hashes, bands)
     return banded.join(sh, "_id").select("band", "bhash", "_id", "_sh")
 
 

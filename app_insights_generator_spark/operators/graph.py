@@ -1,18 +1,24 @@
 """Iterative graph algorithms as driver-loop DataFrame fixpoints.
 
-Connected components lives in operators/dedup.py (hash-min label
-propagation for dup clusters); this module holds the general-purpose
-additions, starting with PageRank.
+Hash-min connected components for dup clusters (``connected_components``)
+lives in operators/dedup.py; this module holds the general-purpose graph
+operators: PageRank and its variants, BFS, SSSP, triangles, k-core, label
+propagation, HITS and large-star/small-star connected components
+(``connected_components_star``).
 
 Design notes (same iterative-Spark discipline as connected_components):
-- each iteration is ONE shuffle: edges join ranks on src (map-side when
-  the rank table is broadcastable), then sum per dst;
+- each PageRank iteration is ONE shuffle: edges join ranks on src
+  (map-side when the rank table is broadcastable), then sum per dst;
 - lineage is pinned per round (operators/checkpointing.pin) so the plan
   stays flat. The pins are local checkpoints unless the session sets
   ``spark.checkpoint.dir``, which makes them reliable checkpoints that
   survive executor loss (dynamic-allocation decommission included);
-- NOTHING is collected per round — the loop count is fixed, so there is
-  no driver-side convergence state at all.
+- fixed-count loops (PageRank, HITS, SSSP, k-core, label propagation)
+  collect nothing per round. The loops that stop on convergence observe
+  one metric per round: ``bfs_depths`` the frontier count and
+  ``connected_components_star`` an edge signature, each read from an
+  ``observe()`` on the round's pin, so a round is still one job
+  (star-CC adds one exact confirm once two signatures match).
 
 Determinism: ranks are INTEGER fixed-point (micro-units of total mass
 ``scale``), contributions use floor division — integer sums are exact

@@ -11,38 +11,38 @@ Three modes with identical output semantics:
 - ``sweep_grouping_sets`` — the Spark-native rewrite (SURVEY.md §4.3): the
   input is PRE-AGGREGATED to one row per distinct key tuple (the tuple
   table; bucketing collapses cardinality enormously at 100 TB), and every
-  wanted set is aggregated from it with ``cube``/``groupingSets``. The
-  Expand's fan-out then multiplies the tuple count, not the raw row count:
-  count = sum of pre-counts, min(display) = min of pre-mins.
+  wanted set is aggregated from it, so the fan-out multiplies the tuple
+  count, not the raw row count: count = sum of pre-counts, min(display) =
+  min of pre-mins.
 
 - ``sweep_apriori`` — level-wise with support pruning over the same tuple
-  table; when the whole lattice is small it runs the exhaustive plan below
+  table; when the whole lattice is small it runs the exhaustive plan
   instead.
 
-The exhaustive plan (``_exhaustive``) is picked from two facts only: the
-number of wanted sets and the tuple count. A sweep is *small* when
-tuples x sets <= 20M and sets <= 1,100.
+Every native job is ONE aggregation over the tuple table (``_sets_agg``):
+each tuple row is exploded once per set of the job and tagged with the
+set's bitmask ``_mask`` (bit i = ``cols[i]``); rows with a NULL in a
+grouped column are dropped (the reference's pre-agg isNotNull,
+main.py:288); the group key is ``_mask`` plus every column masked to NULL
+where its bit is off; groups under the threshold are dropped. The sets are
+one literal array, so the generated code has one term per column however
+many sets a job carries; Spark's ``cube``/``groupingSets`` plan an Expand
+with one generated projection per set instead. Against those Expand plans
+on a 4-core box: the 105-set Play-Store CLI flow 3.54 s -> 2.09 s (median
+of 10 alternating pairs), the 1,023-set wide cube 15.6-16.0 s -> 4.1-4.2 s
+warm at sf0.01 and 66.5-75.5 s -> 54.4-61.1 s at sf0.1 (SCALE.md § "The
+insight sweep").
 
-- More than 64 sets and small: ONE job with interpreted expression
-  evaluation. A many-set Expand emits one generated projection per set,
-  so Janino compilation, not execution, dominates small volumes: a
-  1,024-set cube over 2,550 tuples took 6.0 s compiled and 1.5 s
-  interpreted; the sf0.01 1,023-set wide cube (14.7k tuples) took
-  25.2-25.4 s as four compiled 256-set chunks and 17.7-19.2 s as one
-  interpreted job. At 63 sets compiled still wins (sf0.1 lineitem cube,
-  interpreting only the pin: 1.06-2.22 s compiled, 1.20-2.60 s
-  interpreted), hence the 64.
-- Otherwise compiled, in chunks of ``_adaptive_chunk_size(tuples)`` sets,
-  so no uncapped 16,383-set sweep becomes one 16k-projection plan.
-- A one-job sweep over all 2^n - 1 sets is spelled as a ``cube`` minus the
-  grand total (``grouping_id() == 2^n - 1``); any other job enumerates
-  exactly its sets with ``groupingSets``, so no set needs filtering out.
+One volume rule sizes the jobs: at most ``_SMALL_VOLUME_CAP`` exploded rows
+each, i.e. ``_SMALL_VOLUME_CAP // tuples`` sets (``_sets_per_job``). The
+cap bounds one job's shuffle: the sf0.1 wide cube (363k tuples x 1,023
+sets) took 137 s as one uncapped job and 79 s as 19 capped jobs (fresh
+sessions, cold).
 
-The post-filter (``_keep``) is the threshold plus per-set NULL rejection
-(== the reference's pre-agg isNotNull, main.py:288). It does no arithmetic
-over the grouping flags: ``PruneFilters`` infers constraints from it
-through the Expand, and a sum of 14 ``CASE WHEN`` flag terms cost 4-9 s of
-planning per 105-set sweep (tests/test_playstore_fidelity.py guards it).
+The filters do no arithmetic over the set bits: one NULL test per column
+and the threshold. Catalyst's ``PruneFilters`` infers constraints from
+them, and a sum of 14 ``CASE WHEN`` flag terms once cost 4-9 s of planning
+per 105-set sweep (tests/test_playstore_fidelity.py guards it).
 
 Both native sweeps pin their (tiny, thresholded) result so the caches
 feeding it can be released. The pin is ``checkpointing.pin``: a local
@@ -54,9 +54,9 @@ own EMR config, main.py:134) should do.
 
 from __future__ import annotations
 
-import contextlib
 import itertools
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -72,37 +72,20 @@ from app_insights_generator_spark.operators.insights import (
 )
 
 
-#: Expand-output volume (tuples x grouping sets) and set count up to which a
-#: sweep is small (see the module docstring).
-_INTERPRETED_VOLUME_CAP = 20_000_000
+#: Exploded rows (tuples x sets) per aggregation job, and the set count up
+#: to which ``sweep_apriori`` skips level-wise pruning when the whole
+#: lattice fits in one job.
+_SMALL_VOLUME_CAP = 20_000_000
 _SMALL_MAX_SETS = 1_100
-#: Set count above which a small sweep runs as one interpreted job.
-_INTERPRETED_MIN_SETS = 64
 
 
 def _small(tuples: int, sets: int) -> bool:
-    return tuples * sets <= _INTERPRETED_VOLUME_CAP and sets <= _SMALL_MAX_SETS
+    return tuples * sets <= _SMALL_VOLUME_CAP and sets <= _SMALL_MAX_SETS
 
 
-@contextlib.contextmanager
-def _interpreted_eval(spark):
-    """Run the enclosed EAGER evaluation with interpreted expression eval
-    (``codegen.factoryMode=NO_CODEGEN`` + ``wholeStage=false``), restoring
-    the previous values on exit.
-
-    These are session-level SQL confs: a query running concurrently on the
-    same SparkSession during the window also runs interpreted, and
-    overlapping toggles can restore each other's values out of order. The
-    engine's entry points run queries one at a time per session."""
-    prev_factory = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    prev_wscg = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.codegen.factoryMode", prev_factory)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_wscg)
+def _sets_per_job(tuples: int) -> int:
+    """Sets per aggregation job: the volume cap over the tuple count."""
+    return max(1, _SMALL_VOLUME_CAP // max(tuples, 1))
 
 
 def all_combinations(cfg: InsightsConfig, cols: Sequence[str] | None = None):
@@ -177,39 +160,28 @@ def _tuple_table(
     return table, stats["rows"] or 0, stats["tuples"]
 
 
-def _set_aggs(cols: Sequence[str], display: Sequence[str]) -> list[Column]:
-    """Per-set aggregates over the tuple table, plus one ``_g{i}`` grouping
-    flag per column."""
-    aggs = [F.min(qcol(v)).alias(v) for v in display]
+def _bit(i: int) -> Column:
+    """Whether column i is in the row's set (bit i of ``_mask``)."""
+    return F.col("_mask").bitwiseAND(1 << i) != 0
+
+
+def _sets_agg(
+    table: DataFrame, cols: Sequence[str], cfg: InsightsConfig, sets: Sequence[int], t: int
+) -> DataFrame:
+    """Groups reaching the threshold ``t`` for every set bitmask in
+    ``sets``, as ONE aggregation over the tuple table (module docstring):
+    columns ``_mask``, ``cols`` (NULL where out of the set), the display
+    columns and ``count``."""
+    tagged = table.select("*", F.explode(F.array(*[F.lit(m) for m in sets])).alias("_mask"))
+    keep = reduce(Column.__and__, [~_bit(i) | qcol(c).isNotNull() for i, c in enumerate(cols)])
+    aggs = [F.min(qcol(v)).alias(v) for v in _display(cfg, cols)]
     aggs.append(F.sum("_pre_count").cast("long").alias("count"))
-    aggs.extend(F.grouping(qcol(c)).alias(f"_g{i}") for i, c in enumerate(cols))
-    return aggs
-
-
-def _adaptive_chunk_size(tuples: int) -> int:
-    """Grouping sets per compiled aggregation job, keyed on the tuple count
-    (what the Expand multiplies), not the raw row count.
-
-    Two regimes, both measured on the 1,023-set wide sweep in fresh
-    sessions: at 600k Expand-input rows 40-set chunks win (16.4s vs 24.0s
-    with 256 — a wide Expand leaves the whole-stage-codegen fast path and
-    the per-row penalty dominates); at 60k rows 256-set chunks win (15.7s
-    vs 25.5s — each chunk's ~1s Janino compile dominates tiny data, so
-    fewer jobs beat faster rows). The crossover sits around 1-2e5 rows.
-    """
-    return 40 if tuples > 150_000 else 256
-
-
-def _keep(cols: Sequence[str], t: int) -> Column:
-    """Per-set output predicate over a grouping-sets aggregate: the group
-    reaches the threshold ``t`` and none of its grouped columns is NULL
-    (``_g{i} == 1`` means column i is not in the row's set). One comparison
-    per column and nothing summed over the flags, so Catalyst's constraint
-    inference stays cheap (see the module docstring)."""
-    keep = F.col("count") >= F.lit(t)
-    for i, c in enumerate(cols):
-        keep = keep & ((F.col(f"_g{i}") == 1) | qcol(c).isNotNull())
-    return keep
+    return (
+        tagged.filter(keep)
+        .groupBy("_mask", *[F.when(_bit(i), qcol(c)).alias(c) for i, c in enumerate(cols)])
+        .agg(*aggs)
+        .filter(F.col("count") >= F.lit(t))
+    )
 
 
 def _render(g: DataFrame, cols: Sequence[str], cfg: InsightsConfig) -> DataFrame:
@@ -217,7 +189,7 @@ def _render(g: DataFrame, cols: Sequence[str], cfg: InsightsConfig) -> DataFrame
     (main.py:292-312): non-ID grouping cols, the ID cols' display cols, the
     bare count. Columns outside the row's set render NULL; concat_ws skips
     them."""
-    active = {c: F.col(f"_g{i}") == 0 for i, c in enumerate(cols)}
+    active = {c: _bit(i) for i, c in enumerate(cols)}
     fields = [F.when(active[c], format_value(c, cfg)) for c in cols if c not in cfg.id_cols]
     fields += [
         F.when(active[c], format_value(v, cfg))
@@ -232,34 +204,22 @@ def _render(g: DataFrame, cols: Sequence[str], cfg: InsightsConfig) -> DataFrame
 def _exhaustive(
     table: DataFrame, tuples: int, cols: Sequence[str], cfg: InsightsConfig, t: int
 ) -> DataFrame:
-    """Every wanted set, aggregated from the persisted tuple table in the
-    plan the module docstring's rule picks; returns the pinned result and
+    """Every wanted set, aggregated from the persisted tuple table in jobs
+    of ``_sets_per_job(tuples)`` sets; returns the pinned result and
     releases the table."""
-    sets = [list(c) for c in all_combinations(cfg, cols)]
-    interpreted = len(sets) > _INTERPRETED_MIN_SETS and _small(tuples, len(sets))
-    size = len(sets) if interpreted else _adaptive_chunk_size(tuples)
-    key_cols = [qcol(c) for c in cols]
-    aggs = _set_aggs(cols, _display(cfg, cols))
-    if size >= len(sets) and len(sets) == 2 ** len(cols) - 1:
-        # The grand total (every column grouped out) has grouping_id 2^n - 1.
-        grouped = [
-            table.cube(*key_cols)
-            .agg(*aggs, F.grouping_id().alias("_gid"))
-            .filter(F.col("_gid") != 2 ** len(cols) - 1)
-        ]
-    else:
-        grouped = [
-            table.groupingSets([[qcol(c) for c in s] for s in sets[i : i + size]], *key_cols)
-            .agg(*aggs)
+    sets = [sum(1 << cols.index(c) for c in s) for s in all_combinations(cfg, cols)]
+    size = _sets_per_job(tuples)
+    result = union_all(
+        [
+            _render(_sets_agg(table, cols, cfg, sets[i : i + size], t), cols, cfg)
             for i in range(0, len(sets), size)
         ]
-    result = union_all([_render(g.filter(_keep(cols, t)), cols, cfg) for g in grouped])
+    )
     try:
         # Materialize once (the thresholded output is tiny next to the
         # input), then release the table: otherwise every sweep in a
         # long-lived session leaks its cache.
-        with _interpreted_eval(table.sparkSession) if interpreted else contextlib.nullcontext():
-            return checkpointing.pin(result)
+        return checkpointing.pin(result)
     finally:
         table.unpersist()
 
@@ -299,95 +259,61 @@ def sweep_apriori(
 
     Scale story (the reference's 16,383-set workload at 100 TB): a 2%
     support threshold kills most multi-column sets after 2–3 levels, so the
-    2^n sweep collapses to a handful of level jobs, each a groupingSets
-    aggregation over the tuple table in chunks of ``_adaptive_chunk_size``
-    sets. Driver-side data is only the per-set survival bitmap (<=
-    sets-per-level rows). Each level chunk is persisted — consumed twice
-    (survival flags, final union), and recomputation, not memory, is the
-    expensive resource at scale; every cache is released before returning,
-    the final output pinned by one eager pin of the (tiny, thresholded)
-    result.
+    2^n sweep collapses to a handful of levels, each the same
+    ``_sets_agg`` jobs as the exhaustive plan over the tuple table.
+    Driver-side data is only the surviving set bitmasks (<= sets-per-level
+    rows). Each job is persisted — consumed twice (survivors, final
+    union), and recomputation, not memory, is the expensive resource at
+    scale; every cache is released before returning, the final output
+    pinned by one eager pin of the (tiny, thresholded) result.
 
-    When the whole lattice is small (module docstring), level-wise
-    iteration is pure overhead — ~n levels of (compile + job + survival
-    collect) to prune work that was already cheap — so the sweep runs the
-    exhaustive plan over the same tuple table instead. Pruned sets emit no
-    qualifying rows by anti-monotonicity, so the result is identical.
-    Measured (sf0.1, 1,023 sets, 2.5k tuples): 20.6s level-wise -> ~12s
-    exhaustive.
+    When the whole lattice is small (one job's volume, at most
+    ``_SMALL_MAX_SETS`` sets), level-wise iteration is pure overhead — ~n
+    levels of (job + survivor collect) to prune work that was already
+    cheap — so the sweep runs the exhaustive plan over the same tuple
+    table instead. Pruned sets emit no qualifying rows by
+    anti-monotonicity, so the result is identical.
     """
     cols = list(cols or cfg.agg_cols)
     max_size = cfg.max_combo_size or len(cols)
-    display = _display(cfg, cols)
-    table, rows, tuples = _tuple_table(df, cols, display)
+    table, rows, tuples = _tuple_table(df, cols, _display(cfg, cols))
     t = threshold_count(cfg, rows if total_count is None else total_count)
     if _small(tuples, sum(1 for _ in all_combinations(cfg, cols))):
         return _exhaustive(table, tuples, cols, cfg, t)
 
-    chunk_size = _adaptive_chunk_size(tuples)
-    key_cols = [qcol(c) for c in cols]
-    aggs = _set_aggs(cols, display)
-
-    def level_dfs(sets: list[tuple[str, ...]]) -> list[DataFrame]:
-        out = []
-        for i in range(0, len(sets), chunk_size):
-            chunk = sets[i : i + chunk_size]
-            g = table.groupingSets(
-                [[qcol(c) for c in s] for s in chunk], *key_cols
-            ).agg(*aggs)
-            out.append(g.filter(_keep(cols, t)).persist())
-        return out
-
-    out: list[DataFrame] = []
+    size = _sets_per_job(tuples)
     persisted: list[DataFrame] = []
-    current: list[tuple[str, ...]] = [(c,) for c in cols]
+    bits = range(len(cols))
+    current = [1 << i for i in bits]
     k = 1
     while current and k <= max_size:
-        chunks = level_dfs(current)
-        persisted.extend(chunks)
-        # Survival bitmap: which of this level's sets emitted >= 1 group.
-        # ONE action for the whole level: unioning the per-chunk flag
-        # projections makes Spark schedule every chunk's aggregation stage
-        # concurrently inside a single job (they share the persisted table),
-        # so the level's wall-clock is the slowest chunk, not the sum.
-        #
-        # Levels run compiled: order-balanced A/Bs of interpreted levels
-        # at sf0.1 (40-set chunks) read 1-2s slower warm, for a saving on
-        # the first run's Janino compiles only.
-        flag_rows = union_all(
-            [
-                g.select(*[F.col(f"_g{i}") for i in range(len(cols))]).distinct()
-                for g in chunks
-            ]
-        ).distinct().collect()
+        jobs = [
+            _sets_agg(table, cols, cfg, current[i : i + size], t).persist()
+            for i in range(0, len(current), size)
+        ]
+        persisted.extend(jobs)
+        # The level's surviving sets: ONE action, so Spark schedules every
+        # job's aggregation stage (they share the persisted table) inside a
+        # single job, and the level's wall-clock is the slowest job.
         survivors = {
-            frozenset(c for i, c in enumerate(cols) if row[f"_g{i}"] == 0)
-            for row in flag_rows
+            row["_mask"]
+            for row in union_all([g.select("_mask").distinct() for g in jobs])
+            .distinct()
+            .collect()
         }
-        out.extend(_render(g, cols, cfg) for g in chunks)
-        prev = {frozenset(s) for s in current if frozenset(s) in survivors}
-        cand = {
-            s | {c}
-            for s in prev
-            for c in cols
-            if c not in s
-        }
+        cand = {m | 1 << i for m in survivors for i in bits if not m >> i & 1}
         current = sorted(
-            (
-                tuple(c for c in cols if c in s)
-                for s in cand
-                if all(s - {c} in prev for c in s)
-            ),
+            m for m in cand if all(m & ~(1 << i) in survivors for i in bits if m >> i & 1)
         )
         k += 1
-    if not out:
+    if not persisted:
         table.unpersist()
         return df.sparkSession.createDataFrame([], "Insights string")
-    # Materialize the final union from the still-cached level chunks, then
+    # Materialize the final union from the still-cached level jobs, then
     # release every cache: the thresholded output is tiny next to the
     # input, and without this a long-lived session (the 100+-query oracle
-    # gate, a notebook) accumulates one cached chunk per sweep.
-    result = checkpointing.pin(union_all(out))
+    # gate, a notebook) accumulates one cached job per sweep.
+    result = checkpointing.pin(union_all([_render(g, cols, cfg) for g in persisted]))
     table.unpersist()
     for g in persisted:
         g.unpersist()

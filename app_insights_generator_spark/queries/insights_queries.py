@@ -179,10 +179,9 @@ _LI_SWEEP_ORACLE = _li_sweep_oracle()
 @register("insights_sweep_lineitem", _LI_SWEEP_ORACLE)
 def insights_sweep_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Headline sweep: 63 grouping sets over 6 lineitem columns as ONE
-    pre-aggregated cube (SURVEY.md §4.3) — the scale path for the
-    reference's 16,383-query loop. Measured in fresh sessions: the single
-    63-set cube (~5.1s sf0.1) beats 32-set chunks (~7.5s) — below the
-    ~40-60-set Expand codegen cliff one job wins on job overhead."""
+    set-mask aggregation over the pre-aggregated tuple table (SURVEY.md
+    §4.3, operators/sweep.py) — the scale path for the reference's
+    16,383-query loop."""
     return sweep_grouping_sets(_lineitem_base(spark, sf_dir), LINEITEM_CFG)
 
 
@@ -236,8 +235,8 @@ WIDE_CFG = InsightsConfig(
 # columns with coarse buckets, so the distinct-tuple pre-aggregation
 # collapses ~600k rows to a few hundred tuples and the count distribution
 # over tuples is heavily skewed. The high-card workload above stresses
-# Expand volume; this one stresses pruning-threshold math and guards the
-# _adaptive_chunk_size constants against distribution shift.
+# fan-out volume; this one stresses pruning-threshold math and guards the
+# sweep's per-job volume rule against distribution shift.
 _WIDE_LOWCARD_BUCKETS = {
     "l_quantity": 25,
     "l_extendedprice": 50_000,
@@ -324,8 +323,9 @@ _WIDE_ORACLE = _wide_oracle()
 def insights_sweep_lineitem_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide sweep (10 cols, 1,023 sets) in Apriori level-wise mode
     (operators/sweep.py sweep_apriori): the 100 TB path — the 2% support
-    threshold prunes supersets of empty sets, so only a few level jobs run
-    instead of a 1,024-way Expand."""
+    threshold prunes supersets of empty sets, so only a few levels run
+    instead of all 1,023 sets. At sf0.01 the whole lattice is one job's
+    volume, so it takes the exhaustive bailout."""
     return sweep_apriori(_lineitem_wide_base(spark, sf_dir), WIDE_CFG)
 
 
@@ -336,8 +336,8 @@ def insights_sweep_lineitem_wide_lowcard(spark: SparkSession, sf_dir: str) -> Da
     a few hundred rows — the distribution where the pre-aggregation pays
     hardest and far more sets survive the 2% threshold (denser lattice
     levels). Benchmarked alongside the high-cardinality twin so the
-    _adaptive_chunk_size codegen-cliff constants are exercised under BOTH
-    tuple distributions."""
+    sweep's per-job volume rule is exercised under BOTH tuple
+    distributions."""
     return sweep_apriori(
         _lineitem_wide_base(spark, sf_dir, WIDE_LOWCARD_CFG), WIDE_LOWCARD_CFG
     )
@@ -346,14 +346,14 @@ def insights_sweep_lineitem_wide_lowcard(spark: SparkSession, sf_dir: str) -> Da
 @register("insights_sweep_lineitem_wide_cube", _WIDE_ORACLE)
 def insights_sweep_lineitem_wide_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same 1,023-set sweep in EXHAUSTIVE mode (no Apriori pruning) — the
-    comparison point for the pruned sweep. The plan follows the sweep's one
-    rule (operators/sweep.py): at sf0.01 (14.7k tuples) the lattice is small,
-    so it runs as ONE interpreted cube; at sf0.1 (363k tuples) it runs as
-    compiled 40-set chunks and measures 270s vs the Apriori path's 13s — a
-    20x gap from threshold pruning alone (1,023 -> 219 evaluated sets plus
-    the avoided shuffle volume of the doomed sets' groups), which is the
-    whole scale argument for level-wise pruning at the reference's
-    16,383-set workload."""
+    comparison point for the pruned sweep. The jobs follow the sweep's one
+    volume rule (operators/sweep.py): at sf0.01 (14.7k tuples) all 1,023
+    sets fit in one job; at sf0.1 (363k tuples) they run as 19 jobs of at
+    most 55 sets and measure 54-61 s warm against the Apriori path's 9-10 s
+    on a 4-core box — a ~6x gap from threshold pruning alone (1,023 -> 219
+    evaluated sets plus the avoided shuffle volume of the doomed sets'
+    groups), which is the whole scale argument for level-wise pruning at
+    the reference's 16,383-set workload."""
     return sweep_grouping_sets(_lineitem_wide_base(spark, sf_dir), WIDE_CFG)
 
 

@@ -92,7 +92,8 @@ def test_no_row_at_a_time_python_in_registered_queries(spark, sf_dir):
 
 def test_sweep_native_is_single_aggregation_over_preagg(spark, sf_dir, monkeypatch):
     """The native sweep must pre-aggregate to distinct tuples before the
-    Expand: the Expand sits above the pre-aggregation, not the raw scan.
+    fan-out: the set-mask explode reads the persisted tuple table, an
+    aggregation over the scan, not the raw scan, and no Expand is planned.
 
     The sweep pins its result (lineage truncated), so the plan is read from
     a spy on ``checkpointing.pin``, which the sweep resolves at call time:
@@ -109,13 +110,14 @@ def test_sweep_native_is_single_aggregation_over_preagg(spark, sf_dir, monkeypat
     monkeypatch.setattr(checkpointing, "pin", spy)
     QUERIES["insights_sweep_lineitem"](spark, sf_dir)
     [plan] = plans
-    assert "Expand" in plan
-    scan_pos = plan.find("FileScan")
-    expand_pos = plan.find("Expand")
-    agg_before_expand = plan.find("HashAggregate", expand_pos)
-    assert agg_before_expand != -1 and scan_pos > expand_pos, (
-        "Expand should consume the pre-aggregated tuple table"
+    assert "Expand" not in plan
+    explode_pos = plan.find("Generate explode")
+    assert explode_pos != -1
+    explode_child = plan[explode_pos:].splitlines()[1].strip()
+    assert explode_child.startswith("+- InMemoryTableScan"), (
+        "the explode should consume the pre-aggregated tuple table"
     )
+    assert -1 < plan.find("HashAggregate", explode_pos) < plan.find("FileScan", explode_pos)
 
 
 def test_q19_disjunction_split_and_pushed(spark, sf_dir):

@@ -146,11 +146,11 @@ def _filter_conditions(plan):
 
 
 def test_native_sweep_filter_is_cheap_to_plan(apps_bucketed, monkeypatch):
-    # The 105-set sweep's post-filter must stay free of per-row arithmetic
-    # over the grouping flags: Catalyst's PruneFilters infers constraints
-    # from it through the Expand, and a sum of CASE WHEN flag terms made
-    # optimizing this one plan take 4-9 s on a 4-core box (under 0.2 s
-    # without). The sweep resolves checkpointing.pin at call time, so the
+    # The 105-set sweep's filters must stay free of per-row arithmetic
+    # over the set bits: Catalyst's PruneFilters infers constraints from
+    # them, and a sum of CASE WHEN flag terms made optimizing this one
+    # plan take 4-9 s on a 4-core box (under 0.2 s without). The sweep
+    # resolves checkpointing.pin at call time, so the
     # spy sees the exact DataFrame it pins, before anything optimizes it.
     real_pin = checkpointing.pin
     seen = []

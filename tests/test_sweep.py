@@ -1,7 +1,7 @@
 """Sweep equivalence: faithful loop mode == native grouping-sets mode
 (SURVEY.md §7 M3), on real driver testdata (orders @ sf0.001), across
-the cube / chunked-grouping-sets / Apriori plans, and the exhaustive
-sweep's plan-choice rule."""
+one-job / several-job exhaustive plans and the Apriori levels, and the
+shape of the exhaustive sweep's pinned plan."""
 
 from collections import Counter
 
@@ -55,7 +55,7 @@ def test_loop_vs_cube(spark, orders_prepared):
 
 def test_batched_grouping_sets_matches_cube(spark, orders_prepared, monkeypatch):
     cube = _insights_multiset(sweep_grouping_sets(orders_prepared, ORDERS_CFG))
-    monkeypatch.setattr(sweep, "_adaptive_chunk_size", lambda n: 3)
+    monkeypatch.setattr(sweep, "_sets_per_job", lambda n: 3)
     batched = _insights_multiset(sweep_grouping_sets(orders_prepared, ORDERS_CFG))
     assert cube == batched
 
@@ -119,11 +119,11 @@ def test_reliable_checkpoint_dir_matches_default(
 ):
     # With spark.checkpoint.dir set, the result pin is a reliable-storage
     # checkpoint instead of an executor-local one (the cluster deployment
-    # mode); output must be identical either way. Small chunks make the
-    # pinned plan a union of several grouping-sets jobs.
+    # mode); output must be identical either way. Small jobs make the
+    # pinned plan a union of several set aggregations.
     from app_insights_generator_spark.operators.sweep import sweep_apriori
 
-    monkeypatch.setattr(sweep, "_adaptive_chunk_size", lambda n: 3)
+    monkeypatch.setattr(sweep, "_sets_per_job", lambda n: 3)
     default = _insights_multiset(sweep_grouping_sets(orders_prepared, ORDERS_CFG))
     with reliable_pins():
         reliable = _insights_multiset(sweep_grouping_sets(orders_prepared, ORDERS_CFG))
@@ -134,8 +134,8 @@ def test_reliable_checkpoint_dir_matches_default(
 
 def test_cube_drops_grand_total_when_threshold_floors_to_zero(spark, orders_prepared):
     # Under 50 rows the 2% threshold floors to T=0 (SURVEY.md §7 risk 3), so
-    # the grand-total row would pass it: the cube branch must drop it by
-    # grouping_id, both when called directly and in sweep_apriori's
+    # a grand-total row would pass it: no set mask may be 0 (every column
+    # grouped out), both when called directly and in sweep_apriori's
     # exhaustive bailout.
     from app_insights_generator_spark.operators.sweep import sweep_apriori
 
@@ -149,11 +149,11 @@ def test_cube_drops_grand_total_when_threshold_floors_to_zero(spark, orders_prep
         assert all("=" in line for line in native)
 
 
-def _expand_count(plan) -> int:
-    """Expand nodes in a JVM logical plan."""
+def _node_count(plan, name) -> int:
+    """Nodes called ``name`` in a JVM logical plan."""
     children = plan.children()
-    return int(plan.nodeName() == "Expand") + sum(
-        _expand_count(children.apply(i)) for i in range(children.size())
+    return int(plan.nodeName() == name) + sum(
+        _node_count(children.apply(i), name) for i in range(children.size())
     )
 
 
@@ -172,38 +172,64 @@ CODEGEN_CONFS = ("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage"
 
 
 @pytest.mark.parametrize(
-    "run, chunk, interpreted, expands, cube",
+    "run, per_job, jobs",
     [
-        (_query("insights_sweep_lineitem"), None, False, 1, True),  # 63 sets
+        (_query("insights_sweep_lineitem"), None, 1),  # 63 sets
         # 1,023 sets x 965 tuples, through sweep_apriori's bailout
-        (_query("insights_sweep_lineitem_wide_lowcard"), None, True, 1, True),
-        (_playstore_capped_sweep, None, True, 1, False),  # 105 sets
-        (_query("insights_sweep_orders"), 3, False, 5, False),  # 15 sets, chunks of 3
+        (_query("insights_sweep_lineitem_wide_lowcard"), None, 1),
+        (_playstore_capped_sweep, None, 1),  # 105 sets
+        (_query("insights_sweep_orders"), 3, 5),  # 15 sets, jobs of 3
     ],
     ids=["lineitem", "lowcard", "playstore_capped", "orders_chunk3"],
 )
-def test_exhaustive_plan_rule(
-    spark, sf_dir, monkeypatch, run, chunk, interpreted, expands, cube
-):
-    # The exhaustive sweep picks its plan from the set and tuple counts
-    # alone: >64 sets over a small volume run as one interpreted job,
-    # anything else compiled in chunks, and a one-job sweep over every set
-    # is a cube with the grand total dropped by _gid. The spy reads the
-    # confs while the pin runs and the plan of the DataFrame it pins.
+def test_exhaustive_plan_rule(spark, sf_dir, monkeypatch, run, per_job, jobs):
+    # Every exhaustive sweep is a union of set-mask aggregations, one
+    # explode (Generate) each and no Expand, sized by the volume rule
+    # alone; it runs in whatever codegen mode the session has. The spy
+    # reads the confs while the pin runs and the plan of the DataFrame it
+    # pins.
     before = tuple(spark.conf.get(k) for k in CODEGEN_CONFS)
-    if chunk is not None:
-        monkeypatch.setattr(sweep, "_adaptive_chunk_size", lambda n: chunk)
+    if per_job is not None:
+        monkeypatch.setattr(sweep, "_sets_per_job", lambda n: per_job)
     real_pin = checkpointing.pin
     seen = []
 
     def spy(df):
         analyzed = df._jdf.queryExecution().analyzed()
         confs = tuple(spark.conf.get(k) for k in CODEGEN_CONFS)
-        seen.append((confs, _expand_count(analyzed), "_gid" in analyzed.toString()))
+        seen.append((confs, _node_count(analyzed, "Expand"), _node_count(analyzed, "Generate")))
         return real_pin(df)
 
     monkeypatch.setattr(checkpointing, "pin", spy)
     run(spark, sf_dir)
-    during = ("NO_CODEGEN", "false") if interpreted else before
-    assert seen == [(during, expands, cube)]
-    assert tuple(spark.conf.get(k) for k in CODEGEN_CONFS) == before
+    assert seen == [(before, 0, jobs)]
+
+
+@pytest.mark.parametrize("threshold_percent", [2.0, 20.0])
+def test_apriori_level_wise_matches_loop(spark, orders_prepared, monkeypatch, threshold_percent):
+    # Every registered input takes the exhaustive bailout, so the level
+    # loop runs only when forced: two sets per job, so each level is a
+    # union of several persisted jobs.
+    from app_insights_generator_spark.operators.sweep import sweep_apriori
+
+    cfg = InsightsConfig(
+        agg_cols=ORDERS_CFG.agg_cols,
+        bucket_sizes=ORDERS_CFG.bucket_sizes,
+        threshold_percent=threshold_percent,
+    )
+    monkeypatch.setattr(sweep, "_small", lambda tuples, sets: False)
+    monkeypatch.setattr(sweep, "_sets_per_job", lambda n: 2)
+    real_agg = sweep._sets_agg
+    job_sets = []
+
+    def spy(table, cols, cfg, sets, t):
+        job_sets.append(list(sets))
+        return real_agg(table, cols, cfg, sets, t)
+
+    monkeypatch.setattr(sweep, "_sets_agg", spy)
+    loop = _insights_multiset(sweep_loop_df(orders_prepared, cfg))
+    apriori = _insights_multiset(sweep_apriori(orders_prepared, cfg))
+    assert apriori == loop
+    assert sum(loop.values()) > 0
+    assert job_sets[:2] == [[1, 2], [4]]  # level 1: three sets in two jobs
+    assert len(job_sets) > 2  # and a second level ran
