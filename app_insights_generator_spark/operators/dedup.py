@@ -9,6 +9,14 @@ Design for 100 TB:
   evaluated ONCE per document (inlining 64 per-seed array expressions made
   Catalyst re-evaluate the shingling 64x per row), and partial aggregation
   does the mins map-side;
+- near_dedup_minhash hash-partitions the documents by id ONCE, into
+  ``spark.sql.shuffle.partitions`` partitions, before it shingles them,
+  and persists the shingle table with that partitioning. The signature
+  groupBy and both sides of the verify join then reuse it instead of
+  planning their own exchanges. The raw text is shuffled once, where
+  shuffling the shingle arrays (about 3x the text) twice plus the
+  signature partials was the alternative, and tokenizing and hashing use
+  every core even when the corpus arrives as one file split;
 - LSH banding turns the O(n^2) pair space into a banded equi self-join
   over a PINNED narrow (id, band, band_hash) table: the pin computes the
   signature aggregation exactly once (an aliased self-join would run it
@@ -177,14 +185,14 @@ def _jaccard_from_sets(
     # array_distinct'd shingle sets (_shingle_sets), so the arithmetic
     # form equals size(array_union(...)) integer-for-integer while
     # skipping the union's per-pair hash-set build — the verify join
-    # touches each array once instead of twice (guide §1.2 per-task
-    # work; whole-stage CSE evaluates the shared intersect once).
+    # touches each array once instead of twice (whole-stage CSE
+    # evaluates the shared intersect once).
     union = F.size("sh_a") + F.size("sh_b") - inter
     jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     # Filter on the UNROUNDED jaccard (with the same +1e-9 bias the DuckDB
     # oracles use) and round only in the final projection: filtering on
     # round(j,4) would keep j >= threshold-5e-5, a boundary the oracle's
-    # raw-value filter disagrees with (ADVICE r02).
+    # raw-value filter disagrees with.
     return (
         candidates.join(a, "id_a")
         .join(b, "id_b")
@@ -226,8 +234,24 @@ def near_dedup_minhash(
     costliest step: regex splits over every document). The (tiny) verified
     pair list is pinned so the cache can be released before returning; at
     100 TB the persist spills to disk, which still beats two extra full
-    text-processing passes."""
-    sh = _shingle_sets(df, id_col, text_col, shingle_n).persist()
+    text-processing passes.
+
+    The documents are hash-partitioned by ``id_col`` into
+    ``spark.sql.shuffle.partitions`` partitions before shingling, so the
+    cached table carries a ``_id`` hash partitioning that its consumers
+    reuse: the signature ``groupBy("_id")`` and both shingle lookups of
+    the verify join plan no Exchange of their own. The raw text is
+    shuffled once instead of the shingle arrays (about 3x the text)
+    twice plus the signature partials, and the tokenize/shingle and
+    64-hash work spreads over every core even when the input arrives as
+    one file split. The count is explicit so that the cache's partition
+    count never depends on AQE: a count-less ``repartition(id_col)`` may
+    be coalesced toward the advisory partition size, which for a corpus
+    of a few MB is one or two tasks. The repartition stays here rather
+    than in ``_shingle_sets``: the other consumers keep their input's row
+    order."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sh = _shingle_sets(df.repartition(n, id_col), id_col, text_col, shingle_n).persist()
     pairs = _jaccard_from_sets(
         sh, _candidates_from_sets(sh, num_hashes, bands), threshold
     )
@@ -685,8 +709,8 @@ def jaccard_join_prefix_filter(
     # the full rows with pos < prefix_len, so deriving pref by a position
     # filter over a persisted (id, sz, pos, sh) table removes the second
     # collect_list+sort aggregation the old twin posexplode subtrees each
-    # re-ran (guide §1.2: don't compute things twice; measured on the
-    # containment twin: 4.3s -> 2.6s at sf0.1, rows identical).
+    # re-ran (measured on the containment twin: 4.3s -> 2.6s at sf0.1,
+    # rows identical).
     # DISK_ONLY: this is the fully exploded
     # positional token table — row count = corpus token count — and it is
     # held across the prefix join; MEMORY_AND_DISK would compete with the

@@ -632,3 +632,136 @@ def test_hot_bucket_pair_generation_is_streamed_and_exact(spark):
     hgot = {(r.id_a, r.id_b) for r in hp.collect()}
     assert expected <= hgot
     assert all(a < b for a, b in hgot)
+
+
+def _one_file_corpus(spark, path, n_docs=120, seed=11):
+    """The near-dup-pair corpus written as ONE parquet file, so the scan
+    reads it as a single partition (a generated corpus arrives that way)."""
+    _corpus(spark, n_docs=n_docs, seed=seed).coalesce(1).write.parquet(str(path))
+    docs = spark.read.parquet(str(path))
+    assert docs.rdd.getNumPartitions() == 1
+    return docs
+
+
+def _final_children(n):
+    """Children of a physical-plan node, descending through the FINAL
+    adaptive plan and query stages but not into a cached relation's own
+    plan."""
+    cls = n.getClass().getSimpleName()
+    if "AdaptiveSparkPlan" in cls:
+        return [n.executedPlan()]
+    if "QueryStage" in cls:
+        return [n.plan()]
+    ch = n.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
+def _final_nodes(plan):
+    out, stack = [], [plan]
+    while stack:
+        n = stack.pop()
+        out.append(n)
+        stack.extend(_final_children(n))
+    return out
+
+
+def _scan_to_join_paths(plan):
+    """For every InMemoryTableScan below a join, the node names on the
+    way up to the nearest join above it."""
+    paths = []
+
+    def walk(n, since_join):
+        name = n.nodeName()
+        if name == "InMemoryTableScan":
+            if since_join is not None:
+                paths.append(since_join)
+            return
+        if "Join" in name:
+            since_join = []
+        elif since_join is not None:
+            since_join = since_join + [name]
+        for k in _final_children(n):
+            walk(k, since_join)
+
+    walk(plan, None)
+    return paths
+
+
+def test_near_dedup_shingle_table_partitioned_by_id(spark, tmp_path, monkeypatch):
+    """near_dedup_minhash hash-partitions the documents by id into
+    ``spark.sql.shuffle.partitions`` before shingling, even when the
+    corpus is one file split, and every consumer of the cached shingle
+    table reuses that partitioning: the signature aggregation plans no
+    ``_id`` exchange, and both shingle lookups of the verify join read the
+    cache with no Exchange in between. Broadcasts are off so the verify
+    join is the shuffle join it is on a corpus of real size."""
+    docs = _one_file_corpus(spark, tmp_path / "docs")
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n > 1
+    real_pin = D._shared_pin
+    seen = []
+
+    def spy(df):
+        out = real_pin(df)
+        plan = df._jdf.queryExecution().executedPlan()
+        cached = [
+            node.relation().cacheBuilder().cachedColumnBuffers().getNumPartitions()
+            for node in _final_nodes(plan)
+            if node.nodeName() == "InMemoryTableScan"
+        ]
+        seen.append((plan, cached))
+        return out
+
+    monkeypatch.setattr(D, "_shared_pin", spy)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pairs = D.near_dedup_minhash(docs, "doc_id", "text", threshold=0.5)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert pairs.count() > 0
+    (banded, banded_cached), (verify, verify_cached) = seen
+
+    assert banded_cached == [n]
+    assert verify_cached and set(verify_cached) == {n}
+
+    exchanges = [
+        node.simpleString(10)
+        for node in _final_nodes(banded)
+        if node.nodeName() == "Exchange"
+    ]
+    id_exchanges = [
+        e for e in exchanges
+        if e.startswith("Exchange hashpartitioning(_id#") and "ENSURE_REQUIREMENTS" in e
+    ]
+    assert not id_exchanges, id_exchanges
+
+    paths = _scan_to_join_paths(verify)
+    assert len(paths) == 2, paths
+    assert not [p for p in paths if any("Exchange" in name for name in p)], paths
+
+
+def test_near_dedup_matches_unpartitioned_composition(spark, reliable_pins, tmp_path):
+    """On a one-file corpus with planted near-dups, the partitioned
+    pipeline returns exactly the pairs and Jaccard values of the
+    composition of the public operators, which shingles the corpus as it
+    is read, in both pin modes."""
+    docs = _one_file_corpus(spark, tmp_path / "docs")
+
+    def both():
+        fused = D.near_dedup_minhash(docs, "doc_id", "text", threshold=0.5)
+        composed = D.jaccard_pairs(
+            docs,
+            D.minhash_candidates(docs, "doc_id", "text"),
+            "doc_id",
+            "text",
+            threshold=0.5,
+        )
+        return sorted(map(tuple, fused.collect())), sorted(map(tuple, composed.collect()))
+
+    fused, composed = both()
+    assert len(fused) >= 40  # most planted pairs clear 0.5
+    assert fused == composed
+    with reliable_pins():
+        r_fused, r_composed = both()
+    assert r_fused == r_composed == fused
