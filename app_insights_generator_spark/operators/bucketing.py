@@ -11,12 +11,15 @@ support for non-identifier column names like ``len screenshots``
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from app_insights_generator_spark.operators.cleaning import quote_ident, sql_literal
 
 
-def bucket_expr(col: str, size: int | float):
-    """Lower bucket bound of ``col`` for width ``size`` as a Column."""
-    return (F.floor(F.col(f"`{col}`") / F.lit(size)) * F.lit(int(size))).alias(col)
+def bucket_expr(col: str, size: int | float) -> str:
+    """Lower bucket bound of ``col`` for width ``size``, as SQL text named
+    ``col`` (operators/cleaning.py: literals typed as ``F.lit`` types them)."""
+    q = quote_ident(col)
+    return f"floor({q} / {sql_literal(size)}) * {int(size)} AS {q}"
 
 
 def bucketize(df: DataFrame, bucket_sizes: dict[str, int]) -> DataFrame:
@@ -26,9 +29,9 @@ def bucketize(df: DataFrame, bucket_sizes: dict[str, int]) -> DataFrame:
     """
     if not bucket_sizes:
         return df
-    return df.select(
+    return df.selectExpr(
         *[
-            bucket_expr(c, bucket_sizes[c]) if c in bucket_sizes else F.col(f"`{c}`")
+            bucket_expr(c, bucket_sizes[c]) if c in bucket_sizes else quote_ident(c)
             for c in df.columns
         ]
     )

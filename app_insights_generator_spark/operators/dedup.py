@@ -27,7 +27,11 @@ Design for 100 TB:
   the output has no LSH false positives — only (tunable) false negatives;
 - every pin goes through operators/checkpointing.pin, so the session's
   ``spark.checkpoint.dir`` decides whether pinned intermediates survive
-  executor loss.
+  executor loss;
+- the wide expression lists (64 per-seed mins or bit sums, the banded
+  struct arrays) are SQL text, one py4j call each, with literals typed as
+  ``F.lit`` types them (ints INT, e.g. the xxhash64 seeds), so the hash
+  values are the ones a Column tree computes (operators/cleaning.py).
 """
 
 from __future__ import annotations
@@ -80,17 +84,19 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 def _explode_shingle_sets(sh: DataFrame) -> DataFrame:
     """One row per (doc, distinct shingle); empty docs keep one NULL row
     (explode_outer) so every document still gets a sketch."""
-    return sh.select("_id", F.explode_outer("_sh").alias("_sh"))
-
-
-def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, shingle_n: int) -> DataFrame:
-    return _explode_shingle_sets(_shingle_sets(df, id_col, text_col, shingle_n))
+    return sh.selectExpr("_id", "explode_outer(_sh) AS _sh")
 
 
 def _signatures_from_sets(sh: DataFrame, num_hashes: int) -> DataFrame:
-    ex = _explode_shingle_sets(sh)
-    aggs = [F.min(F.xxhash64("_sh", F.lit(i))).alias(f"_m{i}") for i in range(num_hashes)]
-    return ex.groupBy("_id").agg(*aggs)
+    # The k aggregates cross to the JVM as one struct expression, unpacked
+    # by one star, where k aliased Columns cost about 30 round trips each.
+    mins = ", ".join(f"min(xxhash64(_sh, {i})) AS _m{i}" for i in range(num_hashes))
+    return (
+        _explode_shingle_sets(sh)
+        .groupBy("_id")
+        .agg(F.expr(f"struct({mins}) AS _sig"))
+        .select("_id", "_sig.*")
+    )
 
 
 def minhash_signatures(
@@ -110,22 +116,15 @@ def _band_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """[_id, band, bhash]: one row per document and band, ``bhash`` the
     xxhash64 of the band's ``num_hashes // bands`` signature values."""
     rows = num_hashes // bands
-    return sig.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(",", *[f"_m{b * rows + r}" for r in range(rows)])
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("_id", "bk.band", "bk.bhash")
+
+    def band(b: int) -> str:
+        ms = ", ".join(f"_m{b * rows + r}" for r in range(rows))
+        return f"struct({b} AS band, xxhash64(concat_ws(',', {ms})) AS bhash)"
+
+    structs = ", ".join(map(band, range(bands)))
+    return sig.selectExpr("_id", f"explode(array({structs})) AS bk").selectExpr(
+        "_id", "bk.band", "bk.bhash"
+    )
 
 
 def _candidates_from_sets(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -143,9 +142,6 @@ def _candidates_from_sets(sh: DataFrame, num_hashes: int, bands: int) -> DataFra
     # the pin), pairs STREAM out of the join (no materialized pair
     # array), and AQE's skew-join splitting can break a hot (band, bhash)
     # key across tasks — which per-bucket arrays structurally cannot.
-    # Measured at sf0.1 (interleaved, full minhash pipeline): 3.2-3.6s ->
-    # 2.5-2.9s; synthetic hot bucket (2,000 identical docs, ~2.0M pairs):
-    # 26.7s -> 12.2s, pair sets identical in both cases.
     # NULL-id guard replicates the old join's a._id < b._id semantics.
     banded = _shared_pin(
         _band_rows(sig, num_hashes, bands).filter(F.col("_id").isNotNull())
@@ -268,23 +264,15 @@ def simhash_signatures(
     Same explode+groupBy shape as MinHash (codegen'd hashing, map-side
     partial sums; a per-element higher-order-function variant measured
     slower — see minhash_signatures)."""
-    ex = _exploded_shingles(df, id_col, text_col, shingle_n).select(
-        "_id", F.xxhash64("_sh").alias("_h")
-    )
-    bit_aggs = [
-        F.sum(
-            F.when(F.shiftright("_h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"_b{i}")
+    sh = _shingle_sets(df, id_col, text_col, shingle_n)
+    ex = _explode_shingle_sets(sh).selectExpr("_id", "xxhash64(_sh) AS _h")
+    # Bit i's weight is 2^i as a signed bigint: -2^63 for the top bit.
+    terms = ["CAST(0 AS BIGINT)"] + [
+        f"CASE WHEN (sum(CASE WHEN ((shiftright(_h, {i}) & 1) = 1) THEN 1 ELSE -1 END) > 0) "
+        f"THEN CAST({-(2**63) if i == 63 else 2**i} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
         for i in range(64)
     ]
-    sums = ex.groupBy("_id").agg(*bit_aggs)
-    out = F.lit(0).cast("bigint")
-    for i in range(64):
-        weight = -(2**63) if i == 63 else 2**i
-        out = out + F.when(F.col(f"_b{i}") > 0, F.lit(weight).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return sums.select("_id", out.alias("_sim"))
+    return ex.groupBy("_id").agg(F.expr(f"{' + '.join(terms)} AS _sim"))
 
 
 def hamming_band_pairs(
@@ -303,23 +291,13 @@ def hamming_band_pairs(
     sig = hashes.select(
         F.col(id_col).alias("_id"), F.col(hash_col).alias("_sig")
     )
-    chunked = sig.select(
-        "_id",
-        "_sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned("_sig", c * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("cval"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("ck"),
-    ).select("_id", "_sig", "ck.chunk", "ck.cval")
+    chunks = ", ".join(
+        f"struct({c} AS chunk, (shiftrightunsigned(_sig, {c * 16}) & {0xFFFF}) AS cval)"
+        for c in range(4)
+    )
+    chunked = sig.selectExpr("_id", "_sig", f"explode(array({chunks})) AS ck").selectExpr(
+        "_id", "_sig", "ck.chunk", "ck.cval"
+    )
     # Equi self-join over a PINNED narrow chunked table, as in
     # _candidates_from_sets: the pin computes the upstream signature
     # aggregation (64 bit-sums for SimHash) exactly once, the join streams

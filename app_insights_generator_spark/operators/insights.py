@@ -17,22 +17,22 @@ exactly:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-from functools import reduce
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from app_insights_generator_spark.config import InsightsConfig
 from app_insights_generator_spark.operators.bucketing import bucketize
-from app_insights_generator_spark.operators.cleaning import cast_to_int, range_filter
+from app_insights_generator_spark.operators.cleaning import (
+    cast_to_int,
+    quote_ident,
+    range_filter,
+    sql_and,
+    sql_literal,
+)
 
 INSIGHT_DELIM = ";"
-
-
-def qcol(name: str) -> Column:
-    """Column reference that tolerates non-identifier names (spaces)."""
-    return F.col(f"`{name}`")
 
 
 def prepare(df: DataFrame, cfg: InsightsConfig) -> DataFrame:
@@ -48,25 +48,38 @@ def threshold_count(cfg: InsightsConfig, total_count: int) -> int:
     return int((cfg.threshold_percent / 100.0) * total_count)
 
 
-def format_value(col: str, cfg: InsightsConfig, source: Column | None = None) -> Column:
-    """Render one field: ``col=[lo-hi]`` for bucketed numerics else
-    ``col=value`` (main.py:295-307). NULL value -> NULL field."""
-    c = source if source is not None else qcol(col)
+def min_aggs(cols: Sequence[str]) -> list[Column]:
+    """``min(col) AS col`` per column: the display-value pick."""
+    return [F.expr(f"min({q}) AS {q}") for q in map(quote_ident, cols)]
+
+
+def format_value(col: str, cfg: InsightsConfig) -> str:
+    """SQL text rendering one field: ``col=[lo-hi]`` for bucketed numerics
+    else ``col=value`` (main.py:295-307). NULL value -> NULL field."""
+    c = quote_ident(col)
     if col in cfg.bucket_sizes:
         size = int(cfg.bucket_sizes[col])
-        c = F.concat(F.lit("["), c, F.lit("-"), (c + F.lit(size)).cast("long"), F.lit("]"))
-    return F.concat(F.lit(col), F.lit("="), c)
+        c = f"concat('[', {c}, '-', CAST(({c} + {size}) AS BIGINT), ']')"
+    return f"concat({sql_literal(col)}, '=', {c})"
 
 
-def insight_fields(
-    group_cols: Sequence[str], display_cols: Sequence[str], cfg: InsightsConfig
-) -> list[Column]:
-    """Ordered field expressions: grouping cols (minus IDs), display cols,
-    bare count — the reference's post-drop column order (main.py:292-312)."""
-    fields = [format_value(c, cfg) for c in group_cols if c not in cfg.id_cols]
-    fields += [format_value(c, cfg) for c in display_cols]
-    fields.append(qcol("count"))
-    return fields
+def insight_text(
+    cols: Sequence[str], cfg: InsightsConfig, guards: Mapping[str, str] | None = None
+) -> str:
+    """The ``Insights`` string as SQL text: ``concat_ws`` over the fields in
+    the reference's post-drop order (main.py:292-312) — grouping cols minus
+    IDs, the ID cols' display cols, the bare count. With ``guards`` (per
+    column, a SQL test), a column's fields render only where its guard
+    holds; elsewhere they are NULL, which concat_ws skips."""
+
+    def field(c: str, v: str) -> str:
+        text = format_value(v, cfg)
+        return text if guards is None else f"CASE WHEN {guards[c]} THEN {text} END"
+
+    fields = [field(c, c) for c in cols if c not in cfg.id_cols]
+    fields += [field(c, v) for c in cols if c in cfg.id_cols for v in cfg.id_to_value[c]]
+    fields.append("`count`")
+    return f"concat_ws({sql_literal(INSIGHT_DELIM)}, {', '.join(fields)}) AS Insights"
 
 
 def insight_query(
@@ -79,18 +92,12 @@ def insight_query(
     if total_count is None:
         total_count = df.count()
     t = threshold_count(cfg, total_count)
-
-    ids_in_combo = [c for c in combo if c in cfg.id_cols]
-    display = [v for c in ids_in_combo for v in cfg.id_to_value[c]]
-    aggs = [F.min(qcol(v)).alias(v) for v in display]
-    aggs.append(F.count(F.lit(1)).alias("count"))
-
-    not_null = reduce(lambda a, b: a & b, (qcol(c).isNotNull() for c in combo))
+    display = [v for c in combo if c in cfg.id_cols for v in cfg.id_to_value[c]]
+    aggs = min_aggs(display) + [F.expr("count(1) AS `count`")]
     grouped = (
-        df.filter(not_null)
-        .groupBy(*[qcol(c) for c in combo])
+        df.filter(sql_and(f"({quote_ident(c)} IS NOT NULL)" for c in combo))
+        .groupBy(*[F.expr(quote_ident(c)) for c in combo])
         .agg(*aggs)
-        .filter(F.col("count") >= F.lit(t))
+        .filter(f"(`count` >= {t})")
     )
-    fields = insight_fields(list(combo), display, cfg)
-    return grouped.select(F.concat_ws(INSIGHT_DELIM, *fields).alias("Insights"))
+    return grouped.selectExpr(insight_text(combo, cfg))

@@ -27,22 +27,23 @@ main.py:288); the group key is ``_mask`` plus every column masked to NULL
 where its bit is off; groups under the threshold are dropped. The sets are
 one literal array, so the generated code has one term per column however
 many sets a job carries; Spark's ``cube``/``groupingSets`` plan an Expand
-with one generated projection per set instead. Against those Expand plans
-on a 4-core box: the 105-set Play-Store CLI flow 3.54 s -> 2.09 s (median
-of 10 alternating pairs), the 1,023-set wide cube 15.6-16.0 s -> 4.1-4.2 s
-warm at sf0.01 and 66.5-75.5 s -> 54.4-61.1 s at sf0.1 (SCALE.md § "The
-insight sweep").
+with one generated projection per set instead (SCALE.md § "The insight
+sweep" has the measurements).
 
 One volume rule sizes the jobs: at most ``_SMALL_VOLUME_CAP`` exploded rows
 each, i.e. ``_SMALL_VOLUME_CAP // tuples`` sets (``_sets_per_job``). The
-cap bounds one job's shuffle: the sf0.1 wide cube (363k tuples x 1,023
-sets) took 137 s as one uncapped job and 79 s as 19 capped jobs (fresh
-sessions, cold).
+cap bounds one job's shuffle.
 
 The filters do no arithmetic over the set bits: one NULL test per column
-and the threshold. Catalyst's ``PruneFilters`` infers constraints from
-them, and a sum of 14 ``CASE WHEN`` flag terms once cost 4-9 s of planning
-per 105-set sweep (tests/test_playstore_fidelity.py guards it).
+and the threshold, from which Catalyst's ``PruneFilters`` infers
+constraints cheaply (tests/test_playstore_fidelity.py guards it).
+
+Every expression list is SQL text (operators/cleaning.py): the set array,
+the NULL tests, the masked keys and the Insights string each cross to the
+JVM as one string, so a 105-set plan is built in about 100 py4j round
+trips instead of one or more per Column node. Literals are spelled with
+the types ``F.lit`` gives them (ints INT, floats DOUBLE), so the analyzed
+plans are the ones a Column tree builds.
 
 Both native sweeps pin their (tiny, thresholded) result so the caches
 feeding it can be released. The pin is ``checkpointing.pin``: a local
@@ -56,18 +57,17 @@ from __future__ import annotations
 
 import itertools
 from collections.abc import Sequence
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from app_insights_generator_spark.config import InsightsConfig
 from app_insights_generator_spark.operators import checkpointing
+from app_insights_generator_spark.operators.cleaning import quote_ident, sql_and
 from app_insights_generator_spark.operators.insights import (
-    INSIGHT_DELIM,
-    format_value,
     insight_query,
-    qcol,
+    insight_text,
+    min_aggs,
     threshold_count,
 )
 
@@ -151,18 +151,15 @@ def _tuple_table(
     (the sum of the per-tuple counts) and the tuple count, both from ONE
     action. The input is scanned once, shuffling on all key columns, and
     the threshold denominator needs no second pass over it."""
-    aggs = [F.min(qcol(v)).alias(v) for v in display]
-    aggs.append(F.count(F.lit(1)).alias("_pre_count"))
-    table = df.groupBy(*[qcol(c) for c in cols]).agg(*aggs).persist()
-    stats = table.agg(
-        F.sum("_pre_count").alias("rows"), F.count(F.lit(1)).alias("tuples")
-    ).collect()[0]
+    aggs = min_aggs(display) + [F.expr("count(1) AS _pre_count")]
+    table = df.groupBy(*[F.expr(quote_ident(c)) for c in cols]).agg(*aggs).persist()
+    stats = table.selectExpr("sum(_pre_count) AS rows", "count(1) AS tuples").collect()[0]
     return table, stats["rows"] or 0, stats["tuples"]
 
 
-def _bit(i: int) -> Column:
-    """Whether column i is in the row's set (bit i of ``_mask``)."""
-    return F.col("_mask").bitwiseAND(1 << i) != 0
+def _in_set(cols: Sequence[str]) -> dict[str, str]:
+    """Per column, the SQL test that it is in the row's set (bit i of ``_mask``)."""
+    return {c: f"((_mask & {1 << i}) != 0)" for i, c in enumerate(cols)}
 
 
 def _sets_agg(
@@ -172,33 +169,23 @@ def _sets_agg(
     ``sets``, as ONE aggregation over the tuple table (module docstring):
     columns ``_mask``, ``cols`` (NULL where out of the set), the display
     columns and ``count``."""
-    tagged = table.select("*", F.explode(F.array(*[F.lit(m) for m in sets])).alias("_mask"))
-    keep = reduce(Column.__and__, [~_bit(i) | qcol(c).isNotNull() for i, c in enumerate(cols)])
-    aggs = [F.min(qcol(v)).alias(v) for v in _display(cfg, cols)]
-    aggs.append(F.sum("_pre_count").cast("long").alias("count"))
+    bit = _in_set(cols)
+    tagged = table.selectExpr("*", f"explode(array({', '.join(map(str, sets))})) AS _mask")
+    keep = sql_and(f"(NOT {bit[c]} OR ({quote_ident(c)} IS NOT NULL))" for c in cols)
+    keys = [f"CASE WHEN {bit[c]} THEN {q} END AS {q}" for c, q in zip(cols, map(quote_ident, cols))]
+    aggs = min_aggs(_display(cfg, cols)) + [F.expr("CAST(sum(_pre_count) AS BIGINT) AS `count`")]
     return (
         tagged.filter(keep)
-        .groupBy("_mask", *[F.when(_bit(i), qcol(c)).alias(c) for i, c in enumerate(cols)])
+        .groupBy("_mask", *map(F.expr, keys))
         .agg(*aggs)
-        .filter(F.col("count") >= F.lit(t))
+        .filter(f"(`count` >= {t})")
     )
 
 
 def _render(g: DataFrame, cols: Sequence[str], cfg: InsightsConfig) -> DataFrame:
-    """One Insights string per row, fields in the reference's order
-    (main.py:292-312): non-ID grouping cols, the ID cols' display cols, the
-    bare count. Columns outside the row's set render NULL; concat_ws skips
-    them."""
-    active = {c: _bit(i) for i, c in enumerate(cols)}
-    fields = [F.when(active[c], format_value(c, cfg)) for c in cols if c not in cfg.id_cols]
-    fields += [
-        F.when(active[c], format_value(v, cfg))
-        for c in cols
-        if c in cfg.id_cols
-        for v in cfg.id_to_value[c]
-    ]
-    fields.append(F.col("count"))
-    return g.select(F.concat_ws(INSIGHT_DELIM, *fields).alias("Insights"))
+    """One Insights string per row, each field guarded by its column's
+    bit of ``_mask``."""
+    return g.selectExpr(insight_text(cols, cfg, _in_set(cols)))
 
 
 def _exhaustive(

@@ -1,7 +1,7 @@
 """Streaming incremental near-dedup: foreachBatch feeding the persisted
 LSH band index (operators/dedup.py build_band_index /
 incremental_near_dedup) — the streaming face of the daily-ingest dedup
-job, VERDICT r09 item 7a.
+job.
 
 Per micro-batch of newly ingested documents:
 
@@ -14,22 +14,18 @@ Per micro-batch of newly ingested documents:
 3. emit: the batch's verified pairs are staged the same way; the
    cumulative pair set is the union of committed stagings.
 
-State discipline (round 12 — the ivf_stream staged layout, replacing
-the round-9 full-rewrite versioning): batch N writes ONLY its own rows
-to ``index_batches/b{N}`` / ``pairs_batches/b{N}`` with mode=overwrite
-(a replayed half-written batch cleanly rewrites itself) and the
-``_LATEST`` pointer flip is the commit — exactly-once state from
-at-least-once invocation, and the per-batch write cost is **O(batch)**.
-The previous design rewrote the ENTIRE accumulated index and pair set
-per micro-batch (``prev ∪ batch -> index_v{N}``): O(corpus) parquet
-churn per batch, plus every superseded ``index_v*`` snapshot leaked
-forever. Readers union the base table (if a compaction has run) with
-exactly the staged dirs in (base.upto, _LATEST].
+State discipline (the ivf_stream staged layout): batch N writes ONLY
+its own rows to ``index_batches/b{N}`` / ``pairs_batches/b{N}`` with
+mode=overwrite (a replayed half-written batch cleanly rewrites itself)
+and the ``_LATEST`` pointer flip is the commit — exactly-once state
+from at-least-once invocation, at **O(batch)** write cost per batch.
+Readers union the base table (if a compaction has run) with exactly the
+staged dirs in (base.upto, _LATEST].
 
 ``compact_streaming_dedup_state`` is the maintenance job (the
 ivf_stream compaction twin): folds every committed staged dir into
-``index_base_v{N}`` / ``pairs_base_v{N}``, repartitioned so files
-actually coalesce, committed by the atomic ``_BASE`` pointer flip —
+``index_base_v{N}`` / ``pairs_base_v{N}``, clustered by row key so
+files actually coalesce, committed by the atomic ``_BASE`` pointer flip —
 readers see identical rows at any crash point — and ``gc=True``
 reclaims ALL superseded state (staged dirs <= the new upto and every
 non-current base), so the read amplification of a long-running stream
@@ -73,8 +69,9 @@ _PAIRS_SCHEMA = "id_a bigint, id_b bigint, jaccard double"
 
 #: Two state tables share one commit stream: staged per-batch dirs under
 #: ``{kind}_batches/b{N}``, compacted bases at ``{kind}_base_v{N}``. The
-#: ``_BASE`` pointer stores the shared version tag ``base_v{N}``.
-_KINDS = ("index", "pairs")
+#: ``_BASE`` pointer stores the shared version tag ``base_v{N}``. Each
+#: kind maps to its row key, which the fold clusters its rows by.
+_KINDS = {"index": "_id", "pairs": "id_a"}
 _NO_BASE = ""
 
 
@@ -142,7 +139,7 @@ def run_streaming_dedup(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         # Re-check INSIDE the batch: by now the checkpoint's metadata
         # file exists, so the query-id pin catches a checkpoint dir
-        # deleted and recreated at the same path (ADVICE r11 item 2).
+        # deleted and recreated at the same path.
         ensure_lineage(state_dir, checkpoint_dir)
         if batch_id <= _latest_version(state_dir):
             return  # checkpoint replay of an applied batch: state is current
@@ -155,11 +152,10 @@ def run_streaming_dedup(
         # written; a replay of an uncommitted batch overwrites its own
         # half-written dirs. The pointer flip below makes both tables'
         # stagings visible atomically. The batch index is written FIRST
-        # and the staged parquet is read back into the pair probe (round
-        # 13): the batch's shingle+signature subtree — the costliest
-        # per-batch work — is computed exactly once per batch instead of
-        # once for the staging write plus up to three more times inside
-        # incremental_near_dedup's probe/union/verify consumers.
+        # and the staged parquet is read back into the pair probe, so the
+        # batch's shingle+signature subtree — the costliest per-batch
+        # work — runs once, not again in each of incremental_near_dedup's
+        # probe/union/verify consumers.
         batch_index = build_band_index(
             batch_df, id_col, text_col, shingle_n, num_hashes, bands
         ).select(
@@ -215,12 +211,13 @@ def compact_streaming_dedup_state(
     Commit discipline: both merged tables land at
     ``{kind}_base_v{N}`` (N = the _LATEST id folded up to,
     mode=overwrite so a crashed compaction retries into the same
-    paths), repartitioned to ``target_files`` so files genuinely
-    coalesce (the receipt lesson: a partitioned write alone preserves
-    input splits), and the atomic ``_BASE`` pointer flip publishes BOTH
-    at once — a reader before the flip sees old-base + all stagings, a
-    reader after sees new-base + none: identical rows at any crash
-    point. ``gc=True`` reclaims every superseded dir afterwards (staged
+    paths), hash-partitioned by each table's row key into at most
+    ``target_files`` files, sorted by that key, so files genuinely
+    coalesce (a partitioned write alone preserves input splits) and each
+    document's rows land in one file; the atomic ``_BASE`` pointer flip
+    publishes BOTH at once — a reader before the flip sees old-base + all
+    stagings, a reader after sees new-base + none: identical rows at any
+    crash point. ``gc=True`` reclaims every superseded dir afterwards (staged
     <= the new upto, and every base other than the newly committed
     one), so alternating gc settings cannot leak.
 
@@ -256,10 +253,13 @@ def compact_streaming_dedup_state(
         # fixed target wrote MORE files than it folded at small scale
         # (footer overhead included, measured by the receipt gate). A
         # production fold would target bytes-per-file instead of count.
-        n_out = max(1, min(target_files, n_in // 2))
-        merged.repartition(n_out).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"{kind}_{new_tag}")
-        )
+        # Rows cluster by the table's row key: a document's 16 band rows
+        # share one shingle array, which a round-robin deal would re-store
+        # in every output file.
+        n_out, key = max(1, min(target_files, n_in // 2)), _KINDS[kind]
+        merged.repartition(n_out, key).sortWithinPartitions(key).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(state_dir, f"{kind}_{new_tag}"))
     flip_base_pointer(state_dir, new_tag, v)  # the commit, both tables
     if gc:
         for kind in _KINDS:

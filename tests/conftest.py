@@ -2,10 +2,15 @@ from __future__ import annotations
 
 import contextlib
 import os
+import sys
 
 import pytest
 
 from app_insights_generator_spark.session import get_spark
+
+_TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+sys.path.insert(0, _TOOLS)
+from roundtrips import round_trips as _round_trips  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -19,6 +24,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def round_trips(spark):
+    """Context manager counting the py4j round trips of its block
+    (tools/roundtrips.py); yields a one-element list holding the count."""
+    return lambda: _round_trips(spark)
 
 
 @pytest.fixture

@@ -765,3 +765,34 @@ def test_near_dedup_matches_unpartitioned_composition(spark, reliable_pins, tmp_
     with reliable_pins():
         r_fused, r_composed = both()
     assert r_fused == r_composed == fused
+
+
+def test_signature_and_band_build_round_trip_budget(spark, corpus, round_trips):
+    """The 64-hash signature and 16-band rows are built as SQL text: a
+    bounded number of py4j round trips (a Column tree per hash and band
+    cost about 3,000), with the values of that Column-tree form."""
+    sh = D._shingle_sets(corpus, "doc_id", "text", 3).cache()
+    try:
+        with round_trips() as n:
+            sig = D._signatures_from_sets(sh, 64)
+            banded = D._band_rows(sig, 64, 16)
+        assert n[0] <= 150, n[0]
+
+        ex = sh.select("_id", F.explode_outer("_sh").alias("_sh"))
+        ref_sig = ex.groupBy("_id").agg(
+            *[F.min(F.xxhash64("_sh", F.lit(i))).alias(f"_m{i}") for i in range(64)]
+        )
+
+        def band(b):
+            ms = [f"_m{4 * b + r}" for r in range(4)]
+            return F.struct(F.lit(b).alias("band"), F.xxhash64(F.concat_ws(",", *ms)).alias("bhash"))
+
+        ref_bands = ref_sig.select(
+            "_id", F.explode(F.array(*map(band, range(16)))).alias("bk")
+        ).select("_id", "bk.band", "bk.bhash")
+        assert sig.schema == ref_sig.schema and banded.schema == ref_bands.schema
+        assert sorted(sig.collect()) == sorted(ref_sig.collect())
+        assert sorted(banded.collect()) == sorted(ref_bands.collect())
+        assert banded.count() == 16 * corpus.count()
+    finally:
+        sh.unpersist()

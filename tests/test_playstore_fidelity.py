@@ -169,3 +169,21 @@ def test_native_sweep_filter_is_cheap_to_plan(apps_bucketed, monkeypatch):
     assert conditions
     assert not any("CASE WHEN" in c for c in conditions), conditions
     assert optimize_s < 2.0, f"optimizing the sweep plan took {optimize_s:.2f}s"
+
+
+def test_native_sweep_plan_build_round_trip_budget(apps_bucketed, round_trips):
+    # The 105-set aggregation and its Insights rendering are built as SQL
+    # text, one py4j call per expression: a Column tree per set bit,
+    # field and literal cost about 4,200 round trips.
+    from app_insights_generator_spark.operators import sweep
+
+    cols = list(CFG.agg_cols)
+    table, rows, _ = sweep._tuple_table(apps_bucketed, cols, sweep._display(CFG, cols))
+    try:
+        sets = [sum(1 << cols.index(c) for c in s) for s in sweep.all_combinations(CFG, cols)]
+        assert len(sets) == 105
+        with round_trips() as n:
+            sweep._render(sweep._sets_agg(table, cols, CFG, sets, rows // 50), cols, CFG)
+        assert n[0] <= 150, n[0]
+    finally:
+        table.unpersist()

@@ -203,3 +203,54 @@ def test_streaming_dedup_compaction_preserves_state_and_probe(
     assert os.path.isdir(f"{state_dir}/index_base_v2")
     assert snapshot()[1] == pairs3
     assert read_index(spark, state_dir).select("_id").distinct().count() == 7
+
+
+def test_compaction_clusters_band_rows_by_document(spark, sf_dir, tmp_path):
+    """The fold must shrink storage whatever layout the index was staged
+    in. Here each batch's index is built from input hash-partitioned by
+    id into 8 files; a round-robin fold dealt every document's 16 band
+    rows, which all carry the same shingle array, across every output
+    file and grew the index about 3.5x."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from app_insights_generator_spark.sources.readers import load_table
+    from app_insights_generator_spark.streaming._state import flip_latest
+    from app_insights_generator_spark.streaming.dedup_stream import (
+        _staged_path,
+        compact_streaming_dedup_state,
+    )
+
+    state_dir = str(tmp_path / "state")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    cut = docs.agg(F.expr("percentile_approx(doc_id, 0.5)")).first()[0]
+    batches = (docs.filter(f"doc_id < {cut}"), docs.filter(f"doc_id >= {cut}"))
+    for bid, batch in enumerate(batches):
+        D.build_band_index(batch.repartition(8, "doc_id"), "doc_id", "text").write.parquet(
+            _staged_path(state_dir, "index", bid)
+        )
+        spark.createDataFrame(
+            [(bid, bid + 1, 1.0), (bid + 10, bid + 11, 1.0)],
+            "id_a bigint, id_b bigint, jaccard double",
+        ).write.parquet(_staged_path(state_dir, "pairs", bid))
+        flip_latest(state_dir, bid)
+
+    def du(kind):
+        sizes = [
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(state_dir)
+            if os.path.relpath(root, state_dir).startswith(kind)
+            for f in files
+            if f.endswith(".parquet")
+        ]
+        return len(sizes), sum(sizes)
+
+    before = {kind: du(kind) for kind in ("index", "pairs")}
+    rows_before = read_index(spark, state_dir).count()
+    assert before["index"][0] > 8  # the staged layout under test
+    assert compact_streaming_dedup_state(spark, state_dir, gc=True) == 2
+    for kind, (files, size) in before.items():
+        after = du(kind)
+        assert after[0] < files and after[1] < size, (kind, (files, size), after)
+    assert read_index(spark, state_dir).count() == rows_before

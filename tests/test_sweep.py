@@ -233,3 +233,64 @@ def test_apriori_level_wise_matches_loop(spark, orders_prepared, monkeypatch, th
     assert sum(loop.values()) > 0
     assert job_sets[:2] == [[1, 2], [4]]  # level 1: three sets in two jobs
     assert len(job_sets) > 2  # and a second level ran
+
+
+def test_sql_text_literals_and_identifiers_round_trip(spark):
+    # Quotes, backslashes, escapes-in-waiting and dots survive the SQL
+    # spelling unchanged, and literals keep the type F.lit gives them.
+    from app_insights_generator_spark.operators.cleaning import quote_ident, sql_literal
+
+    texts = ["dev's site", "a\\b", "\\'", "line\nbreak", "\\u0041", "a`b", "x.y", "é"]
+    row = spark.range(1).selectExpr(*[f"{sql_literal(t)} AS {quote_ident(t)}" for t in texts])
+    row = row.first()
+    assert list(row.asDict()) == texts
+    assert list(row) == texts
+    values = [3, -2147483648, 2147483648, 0.5, -1e-9, True]
+    got = spark.range(1).selectExpr(*[f"{sql_literal(v)} AS c{i}" for i, v in enumerate(values)])
+    ref = spark.range(1).select(*[F.lit(v).alias(f"c{i}") for i, v in enumerate(values)])
+    assert got.schema == ref.schema
+    assert got.first() == ref.first()
+    # Non-finite floats have no literal form; they parse through a cast.
+    inf = [float("inf"), float("-inf")]
+    assert list(spark.range(1).selectExpr(*map(sql_literal, inf)).first()) == inf
+
+
+def test_sweep_modes_over_quoted_column_names(spark):
+    # Grouped, display and bucketed columns whose names need quoting in
+    # SQL text: a space, a backtick, an apostrophe. The prepare steps see
+    # them too (int cast, float range bounds, bucketing).
+    cfg = InsightsConfig(
+        agg_cols=("len screenshots", "a`b", "dev id"),
+        bucket_sizes={"len screenshots": 5},
+        id_to_value={"dev id": ("dev's site",)},
+        range_filters={"len screenshots": (0.0, 50.0)},
+        int_cast_cols=("len screenshots",),
+        threshold_percent=0.0,
+    )
+    rows = (
+        [("3", "x", "d1", "site one")] * 4
+        + [("7", "x", "d2", None)] * 3
+        + [("n/a", "y", "d1", "site one")] * 2  # cast failure: dropped
+        + [("99", "y", "d2", None)]  # out of range: dropped
+    )
+    schema = "`len screenshots` string, `a``b` string, `dev id` string, `dev's site` string"
+    df = prepare(spark.createDataFrame(rows, schema), cfg)
+    native = _insights_multiset(sweep_grouping_sets(df, cfg))
+    assert native == _insights_multiset(sweep_loop_df(df, cfg))
+    assert native == Counter(
+        [
+            "len screenshots=[0-5];4",
+            "len screenshots=[5-10];3",
+            "a`b=x;7",
+            "dev's site=site one;4",
+            "3",
+            "len screenshots=[0-5];a`b=x;4",
+            "len screenshots=[5-10];a`b=x;3",
+            "len screenshots=[0-5];dev's site=site one;4",
+            "len screenshots=[5-10];3",
+            "a`b=x;dev's site=site one;4",
+            "a`b=x;3",
+            "len screenshots=[0-5];a`b=x;dev's site=site one;4",
+            "len screenshots=[5-10];a`b=x;3",
+        ]
+    )

@@ -6,7 +6,9 @@ building the query:
   DataFrame, from ``queryExecution().tracker().phases()``;
 - the top 5 analyzer/optimizer rules by time, from the JVM-wide
   ``RuleExecutor`` metrics reset before the query is built and dumped
-  after its explain.
+  after its explain;
+- the py4j round trips the query build made (tools/roundtrips.py), the
+  cost of assembling the plan from Python.
 
 Queries that eagerly pin their result (the sweep family) or run
 plan-assertion side effects (bucketed join) execute real work while the
@@ -31,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from app_insights_generator_spark.session import get_spark
 from app_insights_generator_spark.queries import QUERIES
+from roundtrips import round_trips
 
 
 def catalyst_report(spark, df) -> str:
@@ -81,11 +84,13 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"plan: {name}")
         try:
             rule_executor.resetMetrics()
-            df = fn(spark, args.sf)
+            with round_trips(spark) as n:
+                df = fn(spark, args.sf)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
             text = buf.getvalue() + "\n" + catalyst_report(spark, df)
+            text += f"== py4j round trips (query build) ==\n{n[0]}\n"
         except Exception as e:  # record the failure instead of dying mid-list
             text = f"EXPLAIN FAILED: {e!r}\n"
         path = os.path.join(outdir, f"{name}_{args.tag}.txt")
