@@ -43,6 +43,10 @@ class InsightsConfig:
     threshold_percent: float = 2.0
     max_combo_size: int | None = None
 
+    def __post_init__(self) -> None:
+        if not self.agg_cols:
+            raise ValueError("agg_cols is empty: the sweep needs at least one column")
+
     @property
     def numeric_cols(self) -> tuple[str, ...]:
         return tuple(self.bucket_sizes.keys())

@@ -12,23 +12,42 @@ Three modes with identical output semantics:
   input is PRE-AGGREGATED to one row per distinct key tuple (the tuple
   table; bucketing collapses cardinality enormously at 100 TB), and every
   wanted set is aggregated from it, so the fan-out multiplies the tuple
-  count, not the raw row count: count = sum of pre-counts, min(display) =
-  min of pre-mins.
+  count, not the raw row count: count = sum of pre-counts, min of the
+  per-tuple display values.
 
 - ``sweep_apriori`` — level-wise with support pruning over the same tuple
   table; when the whole lattice is small it runs the exhaustive plan
   instead.
 
-Every native job is ONE aggregation over the tuple table (``_sets_agg``):
-each tuple row is exploded once per set of the job and tagged with the
-set's bitmask ``_mask`` (bit i = ``cols[i]``); rows with a NULL in a
-grouped column are dropped (the reference's pre-agg isNotNull,
+Every native job is one set-mask aggregation over the tuple table
+(``_sets_agg``): each tuple row is exploded once per set of the job and
+tagged with the set's bitmask ``_mask`` (bit i = ``cols[i]``); rows with a
+NULL in a grouped column are dropped (the reference's pre-agg isNotNull,
 main.py:288); the group key is ``_mask`` plus every column masked to NULL
 where its bit is off; groups under the threshold are dropped. The sets are
 one literal array, so the generated code has one term per column however
 many sets a job carries; Spark's ``cube``/``groupingSets`` plan an Expand
 with one generated projection per set instead (SCALE.md § "The insight
 sweep" has the measurements).
+
+Every aggregation that reads the input or an exploded row is a hash
+aggregation. Spark hash-aggregates only when every buffer field is mutable
+in an ``UnsafeRow``; a string is not, so a ``min`` over a string display
+column plans a sort-based aggregate, which sorts every row it reads on
+all its keys. Hence each display ``min`` is taken in two steps, the first
+a hash aggregation with ``count``/``sum`` only and the display columns as
+keys, the second the ``min`` over the first one's groups:
+
+- the tuple table groups the input by the key AND display columns, then
+  those groups by the keys with ``min(display)``: one row per key tuple,
+  however many display values an ID has;
+- a job groups the exploded rows by ``_mask``, the masked keys and the
+  display columns (each NULL where its ID column's bit is off), then by
+  ``_mask`` and the keys with ``min(display)``.
+
+``min`` over per-display groups equals ``min`` over rows, NULLs ignored
+alike, whether or not each ID fixes its display values. A config without
+an ID column has no display column, and each step is its first half.
 
 One volume rule sizes the jobs: at most ``_SMALL_VOLUME_CAP`` exploded rows
 each, i.e. ``_SMALL_VOLUME_CAP // tuples`` sets (``_sets_per_job``). The
@@ -146,13 +165,21 @@ def _display(cfg: InsightsConfig, cols: Sequence[str]) -> list[str]:
 def _tuple_table(
     df: DataFrame, cols: Sequence[str], display: Sequence[str]
 ) -> tuple[DataFrame, int, int]:
-    """Collapse the input to one persisted row per distinct key tuple;
-    returns ``(table, rows, tuples)``: the table, the input's row count
-    (the sum of the per-tuple counts) and the tuple count, both from ONE
-    action. The input is scanned once, shuffling on all key columns, and
-    the threshold denominator needs no second pass over it."""
-    aggs = min_aggs(display) + [F.expr("count(1) AS _pre_count")]
-    table = df.groupBy(*[F.expr(quote_ident(c)) for c in cols]).agg(*aggs).persist()
+    """Collapse the input to one persisted row per distinct key tuple,
+    each display column its ``min``; returns ``(table, rows, tuples)``:
+    the table, the input's row count (the sum of the per-tuple counts) and
+    the tuple count, both from ONE action. The input is scanned once and
+    the threshold denominator needs no second pass over it. The scan
+    groups by the key AND display columns with ``count(1)`` only, so it
+    hashes; the ``min`` then reads those groups (module docstring)."""
+    table = df.groupBy(*[F.expr(quote_ident(c)) for c in [*cols, *display]]).agg(
+        F.expr("count(1) AS _pre_count")
+    )
+    if display:
+        table = table.groupBy(*map(quote_ident, cols)).agg(
+            *min_aggs(display), F.expr("sum(_pre_count) AS _pre_count")
+        )
+    table = table.persist()
     stats = table.selectExpr("sum(_pre_count) AS rows", "count(1) AS tuples").collect()[0]
     return table, stats["rows"] or 0, stats["tuples"]
 
@@ -166,20 +193,40 @@ def _sets_agg(
     table: DataFrame, cols: Sequence[str], cfg: InsightsConfig, sets: Sequence[int], t: int
 ) -> DataFrame:
     """Groups reaching the threshold ``t`` for every set bitmask in
-    ``sets``, as ONE aggregation over the tuple table (module docstring):
-    columns ``_mask``, ``cols`` (NULL where out of the set), the display
-    columns and ``count``."""
+    ``sets``, as ONE explode of the tuple table and hash aggregations over
+    it (module docstring): columns ``_mask``, ``cols`` (NULL where out of
+    the set), the display columns (NULL where their ID column is out of
+    the set) and ``count``."""
     bit = _in_set(cols)
-    tagged = table.selectExpr("*", f"explode(array({', '.join(map(str, sets))})) AS _mask")
     keep = sql_and(f"(NOT {bit[c]} OR ({quote_ident(c)} IS NOT NULL))" for c in cols)
-    keys = [f"CASE WHEN {bit[c]} THEN {q} END AS {q}" for c, q in zip(cols, map(quote_ident, cols))]
-    aggs = min_aggs(_display(cfg, cols)) + [F.expr("CAST(sum(_pre_count) AS BIGINT) AS `count`")]
-    return (
-        tagged.filter(keep)
-        .groupBy("_mask", *map(F.expr, keys))
-        .agg(*aggs)
-        .filter(f"(`count` >= {t})")
+
+    def masked(c: str, name: str) -> str:
+        """Column ``name``, NULL where ``c`` is out of the set."""
+        q = quote_ident(name)
+        return f"CASE WHEN {bit[c]} THEN {q} END AS {q}"
+
+    def sql(*parts: str) -> str:
+        """SQL text for ``spark.sql``'s ``str.format``: braces escaped."""
+        return ", ".join(parts).replace("{", "{{").replace("}", "}}")
+
+    count = "CAST(sum(_pre_count) AS BIGINT) AS `count`"
+    shown = [masked(c, v) for c in cols if c in cfg.id_cols for v in cfg.id_to_value[c]]
+    pre = "sum(_pre_count) AS _pre_count" if shown else count
+    # rows with a NULL in a grouped column dropped; keyed by _mask, the
+    # masked keys and the masked display columns
+    text = (
+        f"SELECT _mask, {sql(*(masked(c, c) for c in cols), *shown, pre)} "
+        f"FROM {{rows}} WHERE {sql(keep)} GROUP BY ALL"
     )
+    if shown:
+        mins = [f"min({q}) AS {q}" for q in map(quote_ident, _display(cfg, cols))]
+        outer = sql(*map(quote_ident, cols), *mins, count)
+        text = f"SELECT _mask, {outer} FROM ({text}) GROUP BY ALL"
+    rows = table.selectExpr("*", f"explode(array({', '.join(map(str, sets))})) AS _mask")
+    # spark.sql serves the explode as a temporary view that it drops after
+    # analysis. Dropping a view uncaches its plan, so the view is the
+    # explode, never the cached tuple table itself.
+    return table.sparkSession.sql(f"{text} HAVING (`count` >= {t})", rows=rows)
 
 
 def _render(g: DataFrame, cols: Sequence[str], cfg: InsightsConfig) -> DataFrame:

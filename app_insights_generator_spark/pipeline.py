@@ -10,7 +10,8 @@ combination sweep -> write -> optional two-phase compaction merge
   pre-aggregated tuple table and a single parallel write — no input cache,
   no append batches, no compaction, no ``coalesce(1)`` unless
   ``single_file`` is requested (the reference's per-batch coalesce(1),
-  main.py:358, is a single-task bottleneck at scale);
+  main.py:358, is a single-task bottleneck at scale) — and returns the
+  sweep's pinned result, the rows it wrote, without reading the CSV back;
 - ``mode="loop"`` keeps the faithful shape: the input cached and counted
   once, ≤128-combination batches appended to ``<out>_partitioned`` with
   per-file headers, then re-read and merged into the final CSV exactly
@@ -46,7 +47,14 @@ def extract_data(
     single_file: bool = False,
 ) -> DataFrame:
     """Run the full reference pipeline over a CSV; returns the insights
-    DataFrame after writing ``output_path``."""
+    DataFrame after writing ``output_path``.
+
+    In native mode that DataFrame is the sweep's pinned result, and it
+    lasts only as long as ``checkpointing.pin``'s storage: without
+    ``spark.checkpoint.dir`` a local checkpoint, whose blocks are lost
+    with their executor. A caller that keeps it across executor loss
+    (dynamic allocation, spot executors) should set
+    ``spark.checkpoint.dir`` or re-read ``output_path``."""
     if mode not in ("native", "loop"):
         raise ValueError(f"unknown mode {mode!r} (want 'native' or 'loop')")
     raw = read_csv(spark, csv_path, header=header, infer_schema=infer_schema, schema=schema)
@@ -60,7 +68,7 @@ def extract_data(
         insights = sweep_grouping_sets(bucketed, cfg)
         write_csv(insights, output_path, header=True, mode="overwrite",
                   single_file=single_file)
-        return spark.read.option("header", True).csv(output_path)
+        return insights
     bucketed = bucketed.cache()
     try:
         total = bucketed.count()  # one shared threshold denominator (main.py:344)

@@ -340,7 +340,8 @@ def pipeline_extract_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderstatus", "o_orderpriority", "o_totalprice", "o_orderyear")
     )
     write_csv(base, csv_in, header=True, mode="overwrite")
-    return extract_data(spark, csv_in, csv_out, ORDERS_CFG, mode="native")
+    extract_data(spark, csv_in, csv_out, ORDERS_CFG, mode="native")
+    return spark.read.option("header", True).csv(csv_out)
 
 
 @register("pipeline_extract_orders_loop", _SWEEP_ORACLE)

@@ -3,6 +3,8 @@
 [lo-(lo+size)] labels, name=value fields, bare trailing count, NULL display
 value vanishing via concat_ws (FIXTURES.md §2 golden expectations)."""
 
+import pytest
+
 from app_insights_generator_spark.config import InsightsConfig
 from app_insights_generator_spark.operators.insights import insight_query
 
@@ -72,3 +74,10 @@ def test_threshold_floor_semantics():
     assert threshold_count(cfg, 49) == 0  # int() floors -> no-op threshold
     assert threshold_count(cfg, 50) == 1
     assert threshold_count(cfg, 10_000) == 200
+
+
+def test_empty_agg_cols_rejected():
+    # No sweep column means no grouping set: both sweep modes would fail
+    # deep inside Spark instead.
+    with pytest.raises(ValueError, match="agg_cols"):
+        InsightsConfig(agg_cols=())

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from app_insights_generator_spark.config import InsightsConfig
-from app_insights_generator_spark.pipeline import extract_data
+from app_insights_generator_spark.pipeline import extract_data, main
 from app_insights_generator_spark.sources import load_table
 from app_insights_generator_spark.sources.writers import write_csv
 
@@ -48,6 +48,8 @@ def test_native_and_loop_modes_agree(spark, orders_csv, tmp_path):
     a, b = _insights(native), _insights(loop)
     assert len(a) > 0
     assert a == b
+    # native mode returns the rows it wrote
+    assert a == _insights(spark.read.option("header", True).csv(str(tmp_path / "out_native")))
 
 
 def test_loop_mode_two_phase_merge_artifacts(spark, orders_csv, tmp_path):
@@ -66,3 +68,13 @@ def test_single_file_flag(spark, orders_csv, tmp_path):
     extract_data(spark, orders_csv, out, CFG, mode="native", single_file=True)
     csvs = [f for f in os.listdir(out) if f.startswith("part-") and f.endswith(".csv")]
     assert len(csvs) == 1  # coalesce(1) opt-in (reference main.py:358, 393)
+
+
+def test_cli_rejects_empty_agg_cols(tmp_path):
+    # --agg_cols "" parses to no sweep column; the config refuses it
+    # before a session starts or anything is written.
+    out = tmp_path / "out"
+    args = ["--csv_file_path", str(tmp_path / "in.csv"), "--output_path", str(out)]
+    with pytest.raises(ValueError, match="agg_cols"):
+        main(args + ["--agg_cols", ""])
+    assert not out.exists()

@@ -5,6 +5,7 @@ shape of the exhaustive sweep's pinned plan."""
 
 from collections import Counter
 
+import plan_nodes
 import pytest
 
 from pyspark.sql import functions as F
@@ -203,6 +204,74 @@ def test_exhaustive_plan_rule(spark, sf_dir, monkeypatch, run, per_job, jobs):
     monkeypatch.setattr(checkpointing, "pin", spy)
     run(spark, sf_dir)
     assert seen == [(before, 0, jobs)]
+
+
+def _inputs(node) -> list[str]:
+    """Names of the nearest nodes below ``node`` that aggregate, explode
+    or scan."""
+    out = []
+    for child in plan_nodes.children(node):
+        name = child.nodeName()
+        if name in plan_nodes.AGGREGATES or name == "Generate" or "Scan" in name:
+            out.append(name)
+        else:
+            out += _inputs(child)
+    return out
+
+
+def test_sweep_sorts_only_hashed_groups(spark, monkeypatch):
+    # A sort-based aggregate sorts every row it reads on all its keys, and
+    # a string min(display) forces one. In the executed plans of the
+    # Play-Store tuple table and of the pinned capped sweep, no
+    # SortAggregate reads the input or the exploded rows: each one reads
+    # a HashAggregate's groups. The one explode reads the cached table.
+    real_table, real_pin = sweep._tuple_table, checkpointing.pin
+    plans = []
+
+    def table_spy(*args):
+        out = real_table(*args)
+        plans.append(out[0]._jdf.queryExecution().executedPlan())
+        return out
+
+    def pin_spy(df):
+        out = real_pin(df)
+        plans.append(df._jdf.queryExecution().executedPlan())
+        return out
+
+    monkeypatch.setattr(sweep, "_tuple_table", table_spy)
+    monkeypatch.setattr(checkpointing, "pin", pin_spy)
+    _playstore_capped_sweep(spark, None)
+    table, swept = plans
+    for plan in plans:
+        assert plan_nodes.aggregate_counts(plan)["SortAggregate"] > 0  # the display min
+        for node in plan_nodes.walk(plan):
+            if node.nodeName() == "SortAggregate":
+                inputs = _inputs(node)
+                assert inputs and set(inputs) <= {"HashAggregate", "SortAggregate"}, inputs
+    explodes = [_inputs(n) for n in plan_nodes.walk(swept) if n.nodeName() == "Generate"]
+    assert explodes == [["InMemoryTableScan"]]
+
+def test_sweep_explodes_key_tuples(spark, sf_dir, monkeypatch):
+    # On documents a source has several langs (its display column). The
+    # tuple table still has one row per key tuple, so every set explodes
+    # the key tuples, not the key and display tuples.
+    from app_insights_generator_spark.operators.bucketing import bucketize
+    from app_insights_generator_spark.queries.insights_queries import DOCS_CFG
+
+    real_pin, pinned = checkpointing.pin, []
+    monkeypatch.setattr(checkpointing, "pin", lambda df: pinned.append(df) or real_pin(df))
+    QUERIES["insights_sweep_documents_iddisplay"](spark, sf_dir)
+    docs = bucketize(load_table(spark, sf_dir, "documents"), DOCS_CFG.bucket_sizes)
+    keys = docs.select("source", "n_chars").distinct().count()
+    wide = docs.select("source", "n_chars", "lang").distinct().count()
+    (plan,) = [df._jdf.queryExecution().executedPlan() for df in pinned]
+    exploded = [
+        n.longMetric("numOutputRows").value()
+        for n in plan_nodes.walk(plan)
+        if n.nodeName() == "Generate"
+    ]
+    assert wide > keys
+    assert exploded == [3 * keys]  # sets {source}, {n_chars}, both
 
 
 @pytest.mark.parametrize("threshold_percent", [2.0, 20.0])

@@ -8,7 +8,13 @@ building the query:
   ``RuleExecutor`` metrics reset before the query is built and dumped
   after its explain;
 - the py4j round trips the query build made (tools/roundtrips.py), the
-  cost of assembling the plan from Python.
+  cost of assembling the plan from Python;
+- the HashAggregate, SortAggregate and ObjectHashAggregate counts of the
+  executed plans (tools/plan_nodes.py): the final DataFrame's and every
+  DataFrame pinned through ``checkpointing.pin`` during the build, cached
+  subplans included. A sort-based aggregate (a ``min``/``max`` over a
+  string, say) sorts every row it reads on all its keys; this is where
+  one shows.
 
 Queries that eagerly pin their result (the sweep family) or run
 plan-assertion side effects (bucketed join) execute real work while the
@@ -27,13 +33,53 @@ import argparse
 import io
 import os
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from app_insights_generator_spark.operators import checkpointing
 from app_insights_generator_spark.session import get_spark
 from app_insights_generator_spark.queries import QUERIES
+from plan_nodes import AGGREGATES, aggregate_counts
 from roundtrips import round_trips
+
+
+@contextmanager
+def pinned_frames():
+    """Yields a list that collects every DataFrame pinned inside the
+    block, whatever name a package module imported ``checkpointing.pin``
+    under. Their executed plans are read after the block, so the spy adds
+    no py4j round trips to it."""
+    real = checkpointing.pin
+    pinned = []
+
+    def spy(df):
+        pinned.append(df)
+        return real(df)
+
+    owners = [
+        (m, attr)
+        for name, m in list(sys.modules.items())
+        if name.startswith("app_insights_generator_spark")
+        for attr, value in list(vars(m).items())
+        if value is real
+    ]
+    for m, attr in owners:
+        setattr(m, attr, spy)
+    try:
+        yield pinned
+    finally:
+        for m, attr in owners:
+            setattr(m, attr, real)
+
+
+def aggregate_report(dfs) -> str:
+    """Physical aggregate counts summed over the executed plans of
+    ``dfs``, as text."""
+    counts = [aggregate_counts(df._jdf.queryExecution().executedPlan()) for df in dfs]
+    lines = ["== Physical aggregates (executed plans, pinned ones included) =="]
+    lines += [f"{a}: {sum(c[a] for c in counts)}" for a in AGGREGATES]
+    return "\n".join(lines) + "\n"
 
 
 def catalyst_report(spark, df) -> str:
@@ -84,13 +130,14 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"plan: {name}")
         try:
             rule_executor.resetMetrics()
-            with round_trips(spark) as n:
+            with pinned_frames() as pinned, round_trips(spark) as n:
                 df = fn(spark, args.sf)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
             text = buf.getvalue() + "\n" + catalyst_report(spark, df)
             text += f"== py4j round trips (query build) ==\n{n[0]}\n"
+            text += aggregate_report([*pinned, df])
         except Exception as e:  # record the failure instead of dying mid-list
             text = f"EXPLAIN FAILED: {e!r}\n"
         path = os.path.join(outdir, f"{name}_{args.tag}.txt")
